@@ -119,9 +119,11 @@ def test_cdc_mask_sweep_plan(spark):
         entrymod.staged_queries()["cdc_mask_sweep"](spark, SF_SMOKE)
     )
     assert "CartesianProduct" not in r.raw and "BatchEvalPython" not in r.raw
-    # the sweep never consumes doc_id, so the scan prunes to text alone
+    # the sweep reads doc_id only as the key the batch chunker re-spreads
+    # by before its bigram hashing; every other documents column
+    # (lang, source, n_chars) is pruned from the scan
     schemas = set(re.findall(r"ReadSchema: struct<([^>]*)>", r.raw))
-    assert schemas == {"text:string"}
+    assert schemas == {"doc_id:bigint,text:string"}
 
 
 # ---------------------------------------------------------------------------
