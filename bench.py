@@ -372,7 +372,7 @@ def _scaling_sweep(spark, queries, timings: dict[str, float]) -> dict:
     """
     import math
 
-    from inde1_spark.operators.dedup import release_persisted
+    from inde1_spark.plans.lifecycle import release_persisted
 
     sf_raw = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -450,7 +450,7 @@ def main() -> None:
     # first calibrated run (no prior) normalizes by 1.0 (raw == normalized).
     cal_ratio = round(calibration / prior_cal, 3) if prior_cal else 1.0
 
-    from inde1_spark.operators.dedup import release_persisted
+    from inde1_spark.plans.lifecycle import release_persisted
 
     timings: dict[str, float] = {}
     reps: dict[str, list[float]] = {}

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from inde1_spark.functions.exprs import dec_to_double_exact, ratio_round
+from inde1_spark.plans.lifecycle import lazy_checkpoint, persist
 
 ENTRY_TYPE = "view"
 EXIT_TYPE = "click"
@@ -3894,12 +3895,11 @@ def markov_stationary(
         "k",
         F.floor(F.lit(1e9) / F.col("k") + F.lit(0.5)).cast("long").alias("p_nano"),
     )
-    from inde1_spark.operators.dedup import _lazy_checkpoint, _persist
 
     # persist the count matrix (each loop reference would otherwise
     # re-embed the corpus window pass) and lazily checkpoint the pi chain
     # (kmeans/components invariant: plan stays linear, no eager action)
-    em = _persist(edges.join(rowtot, "u"))
+    em = persist(edges.join(rowtot, "u"))
     # one SQL string for the damping update (identical tree: the repr'd
     # double literals ARE the doubles the injected lits produced) — ~25
     # gateway calls per round otherwise
@@ -3915,7 +3915,7 @@ def markov_stationary(
             F.col("v").alias("s"), F.expr("(p_nano * c) div tot").alias("m")
         )
         inc = contrib.groupBy("s").agg(F.sum("m").cast("long").alias("m_nano"))
-        pi = _lazy_checkpoint(
+        pi = lazy_checkpoint(
             pi.join(inc, "s", "left").selectExpr("s", "k", upd_sql),
             bounded=True,
         )
@@ -4175,12 +4175,10 @@ def kaplan_meier_retention(
     nano-snapped log sum — exact long arithmetic, no engine-libm exp)
     ride the bounded duration grid. S(t) = exp(log_survival).
     """
-    from inde1_spark.operators.dedup import _persist
-
     day = F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
     # persisted: the corpus-end aggregate and the observation table both
     # consume the per-user lifetime pass — one corpus scan, not two
-    per_user = _persist(
+    per_user = persist(
         events.select("user_id", day.alias("d"))
         .groupBy("user_id")
         .agg(F.min("d").alias("first_d"), F.max("d").alias("last_d"))
@@ -4332,9 +4330,8 @@ def profile_columns(events: DataFrame) -> DataFrame:
             )
         ).alias("kv")
     ).select("kv.column_name", "kv.val")
-    from inde1_spark.operators.dedup import _persist
 
-    vhist = _persist(
+    vhist = persist(
         melted.groupBy("column_name", "val").agg(
             F.count("*").cast("long").alias("cnt")
         )
@@ -4590,8 +4587,6 @@ def forecast_conformal(events: DataFrame) -> DataFrame:
     Types need >= 2 train days (ANSI-safe denominator) and >= 1
     calibration day.
     """
-    from inde1_spark.operators.dedup import _persist
-
     daily = _daily_micro(events, "y_micro")
     x = F.datediff(F.to_date("day"), F.lit("1970-01-01").cast("date")).cast(
         "long"
@@ -4599,7 +4594,7 @@ def forecast_conformal(events: DataFrame) -> DataFrame:
     # persisted: rng, the train moments, and the calibration scan all
     # fold over this tiny (types x days) table — without the cache each
     # consumer re-runs the corpus-sized daily aggregation
-    m = _persist(daily.select("event_type", x.alias("x"), "y_micro"))
+    m = persist(daily.select("event_type", x.alias("x"), "y_micro"))
     rng = m.groupBy("event_type").agg(
         F.min("x").alias("x_min"), F.max("x").alias("x_max")
     )
@@ -4707,12 +4702,10 @@ def moments_profile(events: DataFrame) -> DataFrame:
     residuals (documented trade; mean is full precision from the exact
     micro sum). Types need n >= 2 and nonzero variance (ANSI-safe).
     """
-    from inde1_spark.operators.dedup import _persist
-
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    base = _persist(
+    base = persist(
         events.select(
             "event_type",
             F.floor(F.col("value").cast("double") * F.lit(1e6) + F.lit(0.5))
@@ -4800,8 +4793,6 @@ def mann_whitney_pairs(events: DataFrame) -> DataFrame:
     wide-decimal sums, converted once through the digit-split chain;
     all-tied pairs (zero variance) are excluded, ANSI-safe.
     """
-    from inde1_spark.operators.dedup import _persist
-
     def d38(c):
         return c.cast("decimal(38,0)")
 
@@ -4810,7 +4801,7 @@ def mann_whitney_pairs(events: DataFrame) -> DataFrame:
     )
     raw = events.select("event_type", y.alias("y"))
     gmin = raw.agg(F.min("y").alias("y_min"))
-    hist = _persist(
+    hist = persist(
         raw.join(F.broadcast(gmin))
         .select(
             "event_type",
@@ -4974,8 +4965,6 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    from inde1_spark.operators.dedup import _persist
-
     y = F.floor(F.col("value").cast("double") * F.lit(1e6) + F.lit(0.5)).cast(
         "long"
     )
@@ -4983,7 +4972,7 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
     gmin = raw.agg(F.min("y").alias("y_min"))
     # persisted: the bounded histogram feeds merged ranks, per-type moments
     # and the tie term — without it each consumer re-scans the corpus
-    hist = _persist(
+    hist = persist(
         raw.join(F.broadcast(gmin))
         .select(
             "event_type",
@@ -6163,8 +6152,6 @@ def kendall_tau_matrix(lineitem: DataFrame) -> DataFrame:
     combined onto bounded keys); every window runs on the <=64x64 grid
     per pair. Coarsen TAU_DIVS to keep grids bounded on wider domains.
     """
-    from inde1_spark.operators.dedup import _persist
-
     def d38(c):
         return c.cast("decimal(38,0)")
 
@@ -6189,7 +6176,7 @@ def kendall_tau_matrix(lineitem: DataFrame) -> DataFrame:
     # persisted: the bounded cell table feeds the grid, both marginals and
     # the dominance windows — without it each consumer replays the corpus
     # explode
-    cells = _persist(
+    cells = persist(
         vals.select(F.explode(F.array(*pair_structs)).alias("s"))
         .select("s.pair", "s.va", "s.vb")
         .groupBy("pair", "va", "vb")
@@ -7602,9 +7589,8 @@ def hitting_time_markov(
         .union(edges.select(F.col("v").alias("s")))
         .distinct()
     )
-    from inde1_spark.operators.dedup import _lazy_checkpoint, _persist
 
-    em = _persist(edges.join(rowtot, "u"))
+    em = persist(edges.join(rowtot, "u"))
     t = states.select("s", F.lit(0).cast("long").alias("t_nano"))
     for _ in range(horizon):
         inc = (
@@ -7617,7 +7603,7 @@ def hitting_time_markov(
             .agg(F.sum("m").cast("long").alias("m_nano"))
         )
         tq = str(target).replace("'", "''")
-        t = _lazy_checkpoint(
+        t = lazy_checkpoint(
             states.join(inc, "s", "left").selectExpr(
                 "s",
                 f"CASE WHEN s = '{tq}' THEN 0L ELSE 1000000000 "
@@ -7842,11 +7828,10 @@ def friedman_test(events: DataFrame) -> DataFrame:
         .rangeBetween(Window.unboundedPreceding, 0)
     )
     w_eq = Window.partitionBy("day", "x")
-    from inde1_spark.operators.dedup import _persist
 
     # persisted: the bounded ranked cell table feeds per-type sums AND the
     # tie term — without it both replay the corpus (day, type) reduce
-    ranked = _persist(complete.select(
+    ranked = persist(complete.select(
         "day",
         "event_type",
         "x",
@@ -9166,10 +9151,8 @@ def nelson_aalen_hazard(
     bounded by |distinct durations|; at 100 TB the micro snap's
     d*2e6 < 2^53 bound allows ~4.5e9 churners per duration cell.
     """
-    from inde1_spark.operators.dedup import _persist
-
     day = F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date"))
-    per_user = _persist(
+    per_user = persist(
         events.select("user_id", day.alias("d"))
         .groupBy("user_id")
         .agg(F.min("d").alias("first_d"), F.max("d").alias("last_d"))
@@ -9666,7 +9649,6 @@ def cochran_q_weeks(events: DataFrame) -> DataFrame:
     totals are map-side-combinable aggregates over it.
     """
     from inde1_spark.functions.exprs import dec_to_double_exact
-    from inde1_spark.operators.dedup import _persist
 
     def d38(c):
         return c.cast("decimal(38,0)")
@@ -9678,7 +9660,7 @@ def cochran_q_weeks(events: DataFrame) -> DataFrame:
         ).cast("long")
         % k
     )
-    cells = _persist(
+    cells = persist(
         events.select("user_id", dow.alias("j")).distinct()
     )
     rows = cells.groupBy("user_id").agg(
@@ -10245,7 +10227,6 @@ def source_length_drift(documents: DataFrame) -> DataFrame:
     cast-to-double divide is exact-deterministic in both engines.
     """
     from inde1_spark.functions.exprs import dec_ratio_round
-    from inde1_spark.operators.dedup import _persist
 
     w = F.lit(LEN_DRIFT_BIN_WIDTH).cast("long")
     nc = F.col("n_chars").cast("long")
@@ -10255,7 +10236,7 @@ def source_length_drift(documents: DataFrame) -> DataFrame:
     )
     # the bounded histogram feeds totals, the bin list AND both grid join
     # sides — persist it so the corpus-volume scan happens exactly once
-    hist = _persist(
+    hist = persist(
         documents.select("source", binc.alias("bin"))
         .groupBy("source", "bin")
         .agg(F.count("*").cast("long").alias("c"))
@@ -10385,8 +10366,6 @@ def copartition_audit(
             )
         )
 
-    from inde1_spark.operators.dedup import _persist
-
     # customer's key-count side feeds TWO joins, and (unlike matryoshka's
     # truth table) the duplicate single-row aggregates are NOT exchange-
     # reused here (probed: ReusedExchange 0, customer scanned twice) — so
@@ -10396,7 +10375,7 @@ def copartition_audit(
     def side_once(df: DataFrame, t: str, k: str, tag: str) -> DataFrame:
         key = (t, k, tag)
         if key not in _sides:
-            _sides[key] = _persist(side(df, t, k, tag))
+            _sides[key] = persist(side(df, t, k, tag))
         return _sides[key]
 
     def join_row(
@@ -10621,12 +10600,11 @@ def compression_ratio_audit(events: DataFrame) -> DataFrame:
             for c in cols
         ],
     )
-    from inde1_spark.operators.dedup import _persist
 
     # the per-column output rows are 4 projections of this ONE row: persist
     # it, or each union branch re-runs the window pass (the copartition
     # lesson: exchange reuse across union branches is NOT guaranteed)
-    agg = _persist(flagged.agg(
+    agg = persist(flagged.agg(
         F.count("*").cast("long").alias("n_rows"),
         *[
             F.sum(F.when(F.col(f"_start_{c}"), 1).otherwise(0))
@@ -10699,7 +10677,6 @@ def jonckheere_terpstra_trend(events: DataFrame) -> DataFrame:
     (all one group, or every value tied) filter out ANSI-safe.
     """
     from inde1_spark.functions.exprs import dec_floordiv, dec_to_double_exact
-    from inde1_spark.operators.dedup import _persist
 
     def d38(c):
         return c.cast("decimal(38,0)")
@@ -10718,7 +10695,7 @@ def jonckheere_terpstra_trend(events: DataFrame) -> DataFrame:
     g = (F.hour("ts").cast("long") / F.lit(JT_GROUP_HOURS)).cast("long")
     raw = events.select(g.alias("g"), y.alias("y"))
     gmin = raw.agg(F.min("y").alias("y_min"))
-    hist = _persist(
+    hist = persist(
         raw.join(F.broadcast(gmin))
         .select(
             "g",
@@ -10738,7 +10715,7 @@ def jonckheere_terpstra_trend(events: DataFrame) -> DataFrame:
         )
     )
     wcum = Window.partitionBy("g").orderBy("v")
-    cum = _persist(
+    cum = persist(
         grid.withColumn(
             "cumlt",
             F.coalesce(
@@ -10972,12 +10949,11 @@ def range_partition_plan(events: DataFrame, n_parts: int = RANGE_PLAN_PARTS) -> 
     combined); the boundary scan is a window over the bounded grid.
     """
     from inde1_spark.functions.exprs import ratio_round
-    from inde1_spark.operators.dedup import _persist
 
     y = F.floor(F.col("value").cast("double") * F.lit(1e6) + F.lit(0.5)).cast(
         "long"
     )
-    hist = _persist(
+    hist = persist(
         events.select(y.alias("v"))
         .groupBy("v")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -11064,7 +11040,6 @@ def join_size_estimate_audit(
     rule) and errors as sign-split exact round-half-up percents.
     """
     from inde1_spark.functions.exprs import dec_floordiv, dec_ratio_round
-    from inde1_spark.operators.dedup import _persist
     from inde1_spark.operators.text import hash_bucket
 
     def d38(c):
@@ -11078,7 +11053,7 @@ def join_size_estimate_audit(
     )
 
     def side(df: DataFrame, key: str, tag: str) -> tuple:
-        per_key = _persist(
+        per_key = persist(
             df.select(F.col(key).alias("k")).groupBy("k").agg(
                 F.count("*").cast("long").alias(f"c_{tag}")
             )
@@ -11255,13 +11230,12 @@ def predicate_selectivity_audit(events: DataFrame) -> DataFrame:
     estimate engine-identical).
     """
     from inde1_spark.functions.exprs import dec_ratio_round, ratio_round
-    from inde1_spark.operators.dedup import _persist
 
     vmicro = F.floor(
         F.col("value").cast("double") * F.lit(1e6) + F.lit(0.5)
     ).cast("long")
     cutmicro = int(SEL_VALUE_CUT * 1e6)
-    agg = _persist(
+    agg = persist(
         events.select(
             "event_type",
             vmicro.alias("v"),
@@ -11375,11 +11349,10 @@ def restart_cost_audit(
         + F.minute("ts").cast("long") * 60
         + F.second("ts").cast("long")
     )
-    from inde1_spark.operators.dedup import _persist
 
     # persisted: the span branch would otherwise recompute the manifest
     # (and rescan the corpus) with user_id pruned away
-    manifest = _persist(
+    manifest = persist(
         events.groupBy(day.alias("day")).agg(
             F.count("*").cast("long").alias("n_rows"),
             F.countDistinct(

@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from inde1_spark.operators.dedup import COSINE_DEDUP_THRESHOLD, _lazy_checkpoint
+from inde1_spark.operators.dedup import COSINE_DEDUP_THRESHOLD
 from inde1_spark.functions.exprs import dec_to_double_exact, dot_exact, norm_exact
+from inde1_spark.plans.lifecycle import lazy_checkpoint, spread
 
 KMEANS_K = 8
 KMEANS_ITERS = 3
@@ -221,8 +222,8 @@ def semdedup(
     cents = _init_centroids(embeddings, k)
     for _ in range(iters):
         cents = _update(_assign(embeddings, cents))
-    cents = _lazy_checkpoint(cents, bounded=True)
-    asg = _lazy_checkpoint(
+    cents = lazy_checkpoint(cents, bounded=True)
+    asg = lazy_checkpoint(
         _assign(embeddings, cents).select("vec_id", "cluster"), bounded=True
     )
 
@@ -240,13 +241,11 @@ def semdedup(
     # explicit partition COUNT, not just keys: candidate rows are tiny in
     # bytes but expensive in CPU (64-element folds each), and AQE's
     # byte-based coalescing would happily merge them onto one core
-    n_part = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    pair_ids = (
+    pair_ids = spread(
         a.join(b, (a.cluster == b.cluster_b) & (F.col("vec_a") < F.col("vec_b")))
-        .select("cluster", "vec_a", "vec_b")
-        .repartition(n_part, "vec_a", "vec_b")
+        .select("cluster", "vec_a", "vec_b"),
+        "vec_a",
+        "vec_b",
     )
     e = embeddings.select(
         "vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm")
@@ -707,7 +706,7 @@ def semdedup_incremental(
     # the final centroids feed BOTH assigns below; a lazy localCheckpoint
     # makes the Lloyd chain a lineage leaf (k rows materialized once, still
     # no eager action — the semdedup/connected_components pattern)
-    cents = _lazy_checkpoint(cents, bounded=True)
+    cents = lazy_checkpoint(cents, bounded=True)
 
     s_asg = _assign(standing, cents).select(
         F.col("cluster"), F.col("vec_id").alias("vec_idx")
@@ -719,13 +718,12 @@ def semdedup_incremental(
     # payload joins: k coarse keys would serialize the interpreted cosine
     # folds onto k cores, and AQE's byte-based coalescing would keep them
     # there (CLAUDE.md explicit-count rule)
-    n_part = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    pair_ids = (
-        b_asg.join(s_asg, b_asg.cluster_b == s_asg.cluster)
-        .select("vec_new", "vec_idx")
-        .repartition(n_part, "vec_new", "vec_idx")
+    pair_ids = spread(
+        b_asg.join(s_asg, b_asg.cluster_b == s_asg.cluster).select(
+            "vec_new", "vec_idx"
+        ),
+        "vec_new",
+        "vec_idx",
     )
     e = embeddings.select(
         "vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm")

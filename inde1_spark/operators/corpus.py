@@ -23,6 +23,7 @@ from inde1_spark.functions.exprs import (
     word_shingles,
 )
 from inde1_spark.operators.text import TRAIN_PCT, VAL_PCT, _split_label, hash_bucket
+from inde1_spark.plans.lifecycle import lazy_checkpoint, persist, spread
 
 PACK_BUDGET = 2048  # tokens per training shard
 PACK_PACKERS = 8    # parallel packer lanes (raise with cluster size)
@@ -377,12 +378,10 @@ def cross_source_overlap(
     (2.9 s cold). The window partition is a shingle's posting list,
     bounded by the source count — never corpus-sized.
     """
-    from inde1_spark.operators.dedup import _spread_by_key
-
     # repartition before shingling — the dedup.shingle_table rule: a
     # single-file corpus otherwise runs the CPU-heavy explode on one core
     sh = (
-        _spread_by_key(documents.select("doc_id", "source", "text"), "doc_id")
+        spread(documents.select("doc_id", "source", "text"), "doc_id")
         .select(
             "source",
             F.explode(word_shingles(tokens("text"), n)).alias("shingle"),
@@ -979,8 +978,6 @@ def quality_quantile_normalize(documents: DataFrame) -> DataFrame:
     Output is the bounded mapping table (source, quality -> norm_quality,
     with doc counts); applying it to documents is one broadcast join.
     """
-    from inde1_spark.operators.dedup import _persist
-
     from inde1_spark.operators.text import _quality_col
 
     def d38(c):
@@ -993,7 +990,7 @@ def quality_quantile_normalize(documents: DataFrame) -> DataFrame:
 
     # the one corpus-sized pass; persisted because the pooled histogram,
     # the per-source totals and the union all derive from it
-    vals = _persist(
+    vals = persist(
         documents.select("source", _quality_col().alias("quality"))
         .groupBy("source", "quality")
         .agg(F.count("*").cast("long").alias("n_docs"))
@@ -1141,9 +1138,7 @@ def coverage_select(documents: DataFrame, k: int = COVER_K) -> DataFrame:
     engines. Output: selection round, doc, marginal gain, cumulative
     covered-term count.
     """
-    from inde1_spark.operators.dedup import _lazy_checkpoint, _persist
-
-    dt = _persist(
+    dt = persist(
         documents.select(
             "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("term")
         )
@@ -1162,7 +1157,7 @@ def coverage_select(documents: DataFrame, k: int = COVER_K) -> DataFrame:
         # the 1-row selection feeds new_terms AND the output row: cache it
         # so the anti-join + gains aggregate runs once per round, not once
         # per reference (still lazy — no action)
-        sel = _persist(
+        sel = persist(
             gains.join(F.broadcast(mx))
             .filter(F.col("marginal_gain") == F.col("mg"))
             .agg(
@@ -1180,7 +1175,7 @@ def coverage_select(documents: DataFrame, k: int = COVER_K) -> DataFrame:
         # times (rem, the union, cum) — a lazy localCheckpoint keeps the
         # unrolled plan linear instead of re-executing the whole prefix
         # per round (the connected_components rule; vocab-bounded rows)
-        covered = _lazy_checkpoint(
+        covered = lazy_checkpoint(
             new_terms
             if covered is None
             else covered.unionByName(new_terms).distinct()
@@ -1275,12 +1270,11 @@ def stratified_sample_mad(documents: DataFrame, pct_div: int = STRAT_PCT_DIV) ->
         "leftover", (F.col("budget") - F.sum("a0").over(wg)).cast("long")
     )
     wr = Window.orderBy(F.col("rem").desc(), F.col("source").asc())
-    from inde1_spark.operators.dedup import _persist
 
     # persisted: the |sources|-row allocation table is consumed by both the
     # selection join and the final output — and its lineage re-derives every
     # median/MAD histogram, so replaying it would re-scan the corpus
-    strata = _persist(
+    strata = persist(
         strata.withColumn(
             "alloc",
             F.least(
@@ -1497,14 +1491,12 @@ def theil_index(documents: DataFrame) -> DataFrame:
     def lnn(c):
         return F.round(F.log(c.cast("double")) * F.lit(1e9), 0).cast("long")
 
-    from inde1_spark.operators.dedup import _persist
-
     base = documents.select(
         "source", F.col("n_chars").cast("long").alias("x")
     ).filter(F.col("x") > 0)
     # persisted: the |sources|-row table feeds the per-doc term join, the
     # corpus total and the output join — one corpus aggregation, three reads
-    per_src = _persist(
+    per_src = persist(
         base.groupBy("source").agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum("x").cast("long").alias("x_sum"),
@@ -1899,13 +1891,11 @@ def split_balance_audit(documents: DataFrame) -> DataFrame:
     """
     from inde1_spark.functions.exprs import dec_ratio_round
 
-    from inde1_spark.operators.dedup import _persist
-
     split = _split_label(hash_bucket(F.col("doc_id"), 100))
     # counts feeds per-source totals, global split shares, the grand total
     # AND the grid fill-in: persist the tiny (source x split) table so the
     # corpus scan happens exactly once
-    counts = _persist(documents.groupBy(
+    counts = persist(documents.groupBy(
         "source", split.alias("split")
     ).agg(F.count("*").cast("long").alias("c")))
     # fixed 3-bin grid so missing splits contribute their full global mass

@@ -36,6 +36,10 @@ from inde1_spark.functions.exprs import (
     tokens,
     word_shingles,
 )
+from inde1_spark.plans.lifecycle import lazy_checkpoint, persist, spread
+
+# re-exported: perfbench/queries.py imports release_persisted from here
+from inde1_spark.plans.lifecycle import release_persisted  # noqa: F401
 
 # MinHash parameters — shared with the DuckDB oracle (inde1_spark/oracles.py).
 MINHASH_PRIME = 2147483647  # 2^31 - 1
@@ -67,105 +71,6 @@ HAMMING_MAX = 3
 COSINE_DEDUP_THRESHOLD = 0.45  # testdata has no planted vector near-dups; this
 # surfaces the top-0.01% most-similar pairs (14 pairs at sf0.01)
 
-# Persisted intermediates registry: operators stay pure plan builders, but
-# self-joined intermediates (shingles, band tables) are persisted so the
-# tokenize/signature pipeline runs once per job. Long-lived sessions call
-# ``release_persisted()`` after consuming the result; otherwise cached
-# blocks accumulate across invocations (bench.py's clearCache also works).
-_PERSISTED: list = []  # DataFrames (cache-manager) or java RDDs (checkpoint)
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def _spread_by_key(df: DataFrame, key: str) -> DataFrame:
-    """Keyed re-spread at an EXPLICIT partition count.
-
-    The CPU-heavy map work downstream (shingle explodes, vector folds)
-    must not serialize onto one core when the input is a single
-    unsplittable file. The explicit COUNT matters (r12): these inputs
-    are tiny in BYTES, so AQE's byte-based coalescing folded a
-    keyed-only ``repartition`` back to ONE partition and the explode ran
-    single-threaded anyway. Width = the session's shuffle.partitions, so
-    a later groupBy on the same key still reuses the exchange (§2.4).
-    """
-    n_part = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    return df.repartition(n_part, key)
-
-
-# Reduce width for BOUNDED checkpointed round plans (see _lazy_checkpoint):
-# every exchange in such a plan carries a key space bounded by a constant
-# (vocab-capped graph nodes, k*dims centroid cells, per-query top-k rows),
-# so a handful of reduce partitions is right at ANY corpus size — the map
-# side keeps the scan's full parallelism and partial aggregation collapses
-# the data before the exchange either way.
-BOUNDED_ROUND_PARTITIONS = 8
-
-
-def _lazy_checkpoint(df: DataFrame, bounded: bool = False) -> DataFrame:
-    # localCheckpoint persists the underlying RDD OUTSIDE the cache manager
-    # (DataFrame.unpersist can't see it), so register the LogicalRDD's java
-    # RDD handle for release_persisted() to unpersist directly.
-    #
-    # bounded=True — for iteration chains whose checkpointed plans only
-    # shuffle BOUNDED key spaces (kmeans (cid, dim) cells, vocab-capped
-    # word graphs, bounded Markov state sets) — additionally disables AQE
-    # and pins a small shuffle width for the plan->RDD conversion: with
-    # AQE on, toRdd() on an adaptive plan MATERIALIZES every query stage
-    # eagerly (each exchange becomes its own job with full scheduler
-    # round-trips), so an 8-round unroll paid ~6 jobs per round at build
-    # time; with AQE off the rounds stay lazy RDD lineage and execute
-    # inside the consuming action as ordinary stages (r11 A/B:
-    # semdedup_incremental 3.74s -> 1.92s, semdedup_threshold_sweep
-    # 3.53s -> 2.39s, identical output). The fixed small width replaces
-    # the coalescing AQE would have done on those kB-sized exchanges and
-    # is scale-safe BY DEFINITION of bounded (the reduce side never grows
-    # with the corpus). Corpus-scale round tables (connected components,
-    # k-core peels, LPA labels) keep the default: their exchanges need
-    # AQE's byte-based sizing, and the measured A/B regressed 2-3x without
-    # it. Session confs are restored immediately; the consuming query
-    # itself still runs with AQE.
-    sp = df.sparkSession
-    if bounded:
-        old_aqe = sp.conf.get("spark.sql.adaptive.enabled", "true")
-        old_width = sp.conf.get("spark.sql.shuffle.partitions", "200")
-        sp.conf.set("spark.sql.adaptive.enabled", "false")
-        sp.conf.set(
-            "spark.sql.shuffle.partitions", str(BOUNDED_ROUND_PARTITIONS)
-        )
-        try:
-            df = df.localCheckpoint(eager=False)
-        finally:
-            sp.conf.set("spark.sql.adaptive.enabled", old_aqe)
-            sp.conf.set("spark.sql.shuffle.partitions", old_width)
-    else:
-        df = df.localCheckpoint(eager=False)
-    try:
-        _PERSISTED.append(df._jdf.queryExecution().analyzed().rdd())
-    except Exception:
-        _PERSISTED.append(df)  # plan shape changed: best-effort fallback
-    return df
-
-
-def release_persisted() -> int:
-    """Unpersist every intermediate cached by dedup operators (cached
-    DataFrames and localCheckpoint lineage leaves); returns the number of
-    handles released. Call only after the consuming action — a checkpointed
-    plan re-executed after release would have lost its lineage leaf."""
-    n = len(_PERSISTED)
-    for h in _PERSISTED:
-        if isinstance(h, DataFrame):
-            h.unpersist()
-        else:
-            h.unpersist(False)
-    _PERSISTED.clear()
-    return n
-
 
 def shingle_table(documents: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) — distinct word n-gram shingles per document.
@@ -177,7 +82,7 @@ def shingle_table(documents: DataFrame, n: int = 3) -> DataFrame:
     has thousands of splits and Catalyst elides this into the existing
     exchange).
     """
-    return _spread_by_key(documents.select("doc_id", "text"), "doc_id").select(
+    return spread(documents.select("doc_id", "text"), "doc_id").select(
         "doc_id", F.explode(word_shingles(tokens("text"), n)).alias("shingle")
     )
 
@@ -210,19 +115,15 @@ def dedup_exact(documents: DataFrame) -> DataFrame:
     )
 
 
-def _shared_shingle_candidates(
-    sh: DataFrame, min_shared: int = 1, repartition_to: int | None = None
-) -> DataFrame:
+def _shared_shingle_candidates(sh: DataFrame, min_shared: int = 1) -> DataFrame:
     """(doc_a, doc_b): pairs sharing >= ``min_shared`` shingles of ``sh``
     (pass the df-CAPPED table — the posting self-join is the part the cap
-    bounds). ``repartition_to`` forces the partition COUNT for consumers
-    whose per-pair verify is CPU-heavy (AQE's byte-based coalescing would
-    serialize a tiny candidate table onto one core). One spelling for the
-    levenshtein/containment family — keep in sync with the oracle CTEs.
+    bounds). One spelling for the levenshtein/containment family — keep in
+    sync with the oracle CTEs.
     """
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    cand = (
+    return (
         a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
@@ -230,9 +131,6 @@ def _shared_shingle_candidates(
         .filter(F.col("n_shared") >= min_shared)
         .select("doc_a", "doc_b")
     )
-    if repartition_to:
-        cand = cand.repartition(repartition_to, "doc_a", "doc_b")
-    return cand
 
 
 def _pair_overlap(sh: DataFrame, pairs_filter: DataFrame | None = None) -> DataFrame:
@@ -396,10 +294,10 @@ def band_candidates(bands: DataFrame) -> DataFrame:
     """(doc_a, doc_b): distinct pairs sharing >=1 (band, sig) bucket.
 
     The band table feeds both sides of the bucket self-join, so it is
-    persisted (registry above) — without it the signature pipeline runs
+    persisted — without it the signature pipeline runs
     twice.
     """
-    bands = _persist(bands)
+    bands = persist(bands)
     ba = bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
     bb = bands.select(F.col("doc_id").alias("doc_b"), "band", "sig")
     return (
@@ -448,7 +346,7 @@ def dedup_minhash_oracle(
     runs once per job instead of four times (the reference caches its reused
     scan the same way, MainHourly.scala:89).
     """
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     sh_ids = sh.join(shingle_dict(sh), "shingle").select("doc_id", "sid")
     candidates = band_candidates(banded_signature(minhash_signatures(sh_ids), N_PERM, N_BANDS))
     return _pair_jaccard(sh, pairs_filter=candidates).filter(
@@ -485,7 +383,7 @@ def dedup_minhash_fast(
     uncapped one (bench.py ``dedup_minhash_capped``) so the recommended
     100 TB configuration is the one measured.
     """
-    sh = _persist(shingle_table(documents, n))
+    sh = persist(shingle_table(documents, n))
     candidates = band_candidates(
         banded_signature(
             minhash_signatures_fast(documents, n, max_shingle_df=max_shingle_df),
@@ -577,7 +475,7 @@ def dedup_spans(documents: DataFrame, span_tokens: int = SPAN_TOKENS) -> DataFra
     span repeated millions of times would funnel one window partition
     through one task, while the min-agg combines locally and AQE can split
     the skewed join. The exploded span table feeds both the aggregate and
-    the join, so it is persisted (registry above).
+    the join, so it is persisted.
     """
     # tokenize into a REAL column first: a lambda that captures the raw
     # tokens("text") expression re-runs the whole tokenize per span
@@ -595,7 +493,7 @@ def dedup_spans(documents: DataFrame, span_tokens: int = SPAN_TOKENS) -> DataFra
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    exploded = _persist(
+    exploded = persist(
         tokenized.select("doc_id", spans.alias("spans")).select(
             "doc_id", F.posexplode("spans").alias("span_idx", "span")
         )
@@ -671,7 +569,7 @@ def dedup_simhash_oracle(
     computed as an explicit 32-term bit sum (portable to the oracle; Spark
     also has bit_count for the production spelling).
     """
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     sh_ids = sh.join(shingle_dict(sh), "shingle").select("doc_id", "sid")
     return _simhash_pairs(simhash_signatures(sh_ids), max_hamming)
 
@@ -731,7 +629,7 @@ def _simhash_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
         ).alias("bq"),
     ).select("doc_id", "simhash", F.col("bq.q").alias("q"), F.col("bq.bv").alias("bv"))
     # persisted: self-joined below (see dedup_minhash_lsh)
-    bands_long = _persist(bands_long)
+    bands_long = persist(bands_long)
 
     ba = bands_long.select(
         F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"), "q", "bv"
@@ -792,10 +690,10 @@ def dedup_simhash_contract(
     plans, no cartesians); the three counts are 1-row aggregates and the
     final join is a 1x1x1 cross of literal rows.
     """
-    fast = _persist(
+    fast = persist(
         dedup_simhash_fast(documents, max_hamming).select("doc_a", "doc_b")
     )
-    truth = _persist(dedup_ngram_jaccard(documents).select("doc_a", "doc_b"))
+    truth = persist(dedup_ngram_jaccard(documents).select("doc_a", "doc_b"))
     matched = fast.join(truth, ["doc_a", "doc_b"])
     nt = truth.agg(F.count("*").cast("long").alias("n_ground_truth_dups"))
     nf = fast.agg(F.count("*").cast("long").alias("n_found"))
@@ -839,7 +737,7 @@ def dedup_embedding_oracle(
     nature — this is the exact GROUND TRUTH; the scale path is
     ``dedup_embedding_lsh`` (sign-bucket candidates, no cross join).
     """
-    e = _spread_by_key(embeddings, "vec_id").select(
+    e = spread(embeddings, "vec_id").select(
         "vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm")
     )
     a = e.select(
@@ -910,14 +808,14 @@ def dedup_embedding_lsh(
     scale operator is fully hash-gated.
 
     The banded table feeds BOTH sides of the bucket self-join, so it is
-    persisted (registry above): sign/norm compute and the repartition run
+    persisted: sign/norm compute and the repartition run
     once, not once per side — measured 2.3x end-to-end at sf0.1. The
     repartition itself buys parallelism for the row-local band math when
     the source is a single file (at corpus scale the scan is already
     parallel and AQE elides the no-op exchange).
     """
-    e = _persist(
-        _spread_by_key(embeddings, "vec_id").select(
+    e = persist(
+        spread(embeddings, "vec_id").select(
             "vec_id",
             "embedding",
             norm_exact(F.col("embedding")).alias("nrm"),
@@ -997,7 +895,7 @@ def connected_components(
     plan stays O(rounds), nothing materializes until the caller's action,
     and each round's result is computed exactly once when it does.
     """
-    pairs = _lazy_checkpoint(pairs)
+    pairs = lazy_checkpoint(pairs)
     nodes = (
         pairs.select(F.col(src).alias("doc_id"))
         .union(pairs.select(F.col(dst).alias("doc_id")))
@@ -1024,7 +922,7 @@ def connected_components(
             "doc_id",
             F.least(F.col("label"), F.coalesce("plabel", "label")).alias("label"),
         )
-        labels = _lazy_checkpoint(labels)
+        labels = lazy_checkpoint(labels)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -1112,7 +1010,7 @@ def dedup_incremental(
     """
     from inde1_spark.operators.text import hash_bucket
 
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     is_batch = hash_bucket(F.col("doc_id"), 100) < batch_pct
     split = documents.select("doc_id", is_batch.alias("is_batch"))
     batch_ids = split.filter(F.col("is_batch")).select("doc_id")
@@ -1212,14 +1110,11 @@ def dedup_levenshtein(
     100 TB also bound the compared length (substring / thresholded
     levenshtein early exit).
     """
-    # persisted: feeds both sides of the posting self-join (registry above)
-    sh = _persist(cap_shingle_df(shingle_table(documents), max_shingle_df))
+    # persisted: feeds both sides of the posting self-join
+    sh = persist(cap_shingle_df(shingle_table(documents), max_shingle_df))
     # explicit partition COUNT: each candidate costs an O(len^2) DP in the
     # verify, so the tiny table must spread across cores (semdedup idiom)
-    n_part = int(
-        documents.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    cand = _shared_shingle_candidates(sh, min_shared, repartition_to=n_part)
+    cand = spread(_shared_shingle_candidates(sh, min_shared), "doc_a", "doc_b")
     ta = documents.select(
         F.col("doc_id").alias("doc_a"),
         F.col("text").alias("text_a"),
@@ -1276,7 +1171,7 @@ def dedup_containment(
     ratios) so downstream policy can distinguish symmetric near-dups
     from true containment.
     """
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     cand = _shared_shingle_candidates(cap_shingle_df(sh, max_shingle_df), min_shared)
     return (
         _pair_overlap(sh, pairs_filter=cand)
@@ -1323,7 +1218,7 @@ def pagerank_dup_graph(
     — the DuckDB twin unrolls the same rounds as chained CTEs.
     """
     pairs = dedup_ngram_jaccard(documents).select("doc_a", "doc_b")
-    edges = _persist(
+    edges = persist(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
             pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
         )
@@ -1349,7 +1244,7 @@ def pagerank_dup_graph(
             F.col("v").alias("u"), F.expr("r_nano div deg").alias("c")
         )
         s = contrib.groupBy("u").agg(F.sum("c").cast("long").alias("s_nano"))
-        rank = _lazy_checkpoint(
+        rank = lazy_checkpoint(
             rank.join(s, "u", "left").selectExpr("u", "deg", "n_nodes", upd_sql)
         )
     return rank.select(
@@ -1392,7 +1287,7 @@ def similarity_join_allpairs(
     upper-bound filter to tighten candidates further.
     """
     t10 = int(round(threshold * 10))
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     df_sh = sh.groupBy("shingle").agg(F.count("*").cast("long").alias("df"))
     ranked = sh.join(df_sh, "shingle").select(
         "doc_id",
@@ -1473,7 +1368,7 @@ def cdc_chunk_table(
     # bigram — the heaviest row-local pass in the dedup family): a
     # single-file corpus would otherwise run it all on one core (r12;
     # streaming callers keep their micro-batch partitioning)
-    src = documents if documents.isStreaming else _spread_by_key(documents, "doc_id")
+    src = documents if documents.isStreaming else spread(documents, "doc_id")
     d = src.select("doc_id", *carry, toks_col.alias("toks")).filter(
         F.size("toks") >= 1
     )
@@ -1600,7 +1495,7 @@ def dup_graph_transitivity(
     a node key (AQE skew-splits hub nodes) and the output is one row.
     All counts exact longs; the ratio is exact integer round-half-up.
     """
-    edges = _persist(
+    edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
     deg = (
@@ -1679,7 +1574,7 @@ def cdc_doc_overlap(
     The chunk table is persisted once and reused by the doc-mass,
     df-count and pair scans. Exact integer masses; exact-rounded ratio.
     """
-    dch = _persist(
+    dch = persist(
         cdc_chunk_table(documents, avg_chunk, min_words)
         .groupBy("doc_id", "chunk_hash")
         .agg(F.min("n_words").alias("n_words"))
@@ -1737,13 +1632,13 @@ def _fast_audit_pipeline(
     table only when the caller has multiple shingle consumers."""
     sh = shingle_table(documents, n)
     if persist_sh:
-        sh = _persist(sh)
+        sh = persist(sh)
     sid = (
         F.conv(F.substring(F.md5(F.col("shingle")), 1, 8), 16, 10).cast("long")
         % F.lit(MINHASH_PRIME)
     )
     sh_ids = sh.select("doc_id", sid.alias("sid"))
-    sigs = _persist(minhash_signatures(sh_ids, PERMS_FAST))
+    sigs = persist(minhash_signatures(sh_ids, PERMS_FAST))
     cand = band_candidates(banded_signature(sigs, FAST_N_PERM, FAST_N_BANDS))
     return sh, sigs, cand
 
@@ -1951,7 +1846,7 @@ def lsh_rebanding_planner(documents: DataFrame, n: int = 3) -> DataFrame:
     # persisted: the <=33-row histogram is referenced once per config, and
     # without the persist its LINEAGE reruns the estimator audit's whole
     # candidate join per reference (4x the dominant cost for 33 rows)
-    kh = _persist(
+    kh = persist(
         est.groupBy(F.col("n_match_perms").alias("k")).agg(
             F.count("*").cast("long").alias("cnt")
         )
@@ -2033,7 +1928,7 @@ def kcore_dup_graph(
     fixpoint are no-ops in both engines, and the testdata graphs
     converge in <= 3. Output: one row per k (surviving nodes/edges).
     """
-    edges0 = _persist(
+    edges0 = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
     out = None
@@ -2047,7 +1942,7 @@ def kcore_dup_graph(
                 .agg(F.count("*").cast("long").alias("deg"))
             )
             keep = deg.filter(F.col("deg") >= k).select("u")
-            e = _lazy_checkpoint(
+            e = lazy_checkpoint(
                 e.join(keep.withColumnRenamed("u", "doc_a"), "doc_a").join(
                     keep.withColumnRenamed("u", "doc_b"), "doc_b"
                 )
@@ -2094,7 +1989,7 @@ def dedup_threshold_sweep(
     # persisted: each threshold row is a separate aggregate consumer of
     # the (tiny) ppm pair table — without this the audit pipeline would
     # re-run per threshold
-    est = _persist(
+    est = persist(
         minhash_est_jaccard(documents, n).select(
             F.round(F.col("est_jaccard") * F.lit(1e6), 0)
             .cast("long")
@@ -2226,7 +2121,7 @@ def simhash_hamming_histogram(documents: DataFrame) -> DataFrame:
     bounded band keys, hub bands skew-split by AQE) plus one bounded
     33-key aggregate.
     """
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     sh_ids = sh.join(shingle_dict(sh), "shingle").select("doc_id", "sid")
     pairs = _simhash_pairs(simhash_signatures(sh_ids), SIMHASH_BITS)
     hist = pairs.groupBy(F.col("hamming").cast("long").alias("hamming")).agg(
@@ -2283,7 +2178,7 @@ def dup_link_prediction(
     every triangle/transitivity audit already pays. Score arithmetic is exact
     integer micro-rounding.
     """
-    edges = _persist(
+    edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
     und = edges.union(
@@ -2530,7 +2425,7 @@ def degree_assortativity(
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    edges = _persist(
+    edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
     deg = (
@@ -2617,7 +2512,7 @@ def label_propagation_communities(
     aggregate over (node, label) — AQE skew-splits hub labels; state is
     one (node, label) row per node.
     """
-    edges = _persist(
+    edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
     return lpa_histogram(edges, rounds)
@@ -2640,7 +2535,7 @@ def lpa_labels(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     # InMemoryTableScan keeps the child's outputPartitioning, so every
     # round's neighbor join reads it shuffle-free instead of re-exchanging
     # 2|E| rows per round (A/B: build 2.9-3.1 -> 2.5-2.9 s, same rows)
-    nbrs = _persist(_spread_by_key(nbrs, "v"))
+    nbrs = persist(spread(nbrs, "v"))
     labels = (
         nbrs.select("u")
         .distinct()
@@ -2654,7 +2549,7 @@ def lpa_labels(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
             .groupBy("u", "label")
             .agg(F.count("*").cast("long").alias("votes"))
         )
-        labels = _lazy_checkpoint(
+        labels = lazy_checkpoint(
             votes.groupBy("u")
             .agg(
                 F.min(F.struct((-F.col("votes")).alias("nv"), "label")).alias(
@@ -2720,7 +2615,7 @@ def dedup_substring_windows(
     # map pass, and it runs TWICE: the dfreq branch and the join-back
     # branch exchange separately) — a single-file corpus would pin both
     # passes to one core (r12)
-    tokenized = _spread_by_key(
+    tokenized = spread(
         documents.select("doc_id", tokens("text").alias("toks")), "doc_id"
     ).filter(F.size("toks") >= w)
     wins = tokenized.select(
@@ -2767,7 +2662,7 @@ def bridge_edges_audit(
     neighbor — every step an equi-join on a node key (AQE skew-splits
     hubs), edges persisted once and reused.
     """
-    edges = _persist(
+    edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
     adj = edges.select(
@@ -2956,12 +2851,12 @@ def minhash_band_sweep(
     """
     from inde1_spark.functions.exprs import ratio_round
 
-    sh = _persist(shingle_table(documents))
+    sh = persist(shingle_table(documents))
     sid = (
         F.conv(F.substring(F.md5("shingle"), 1, 8), 16, 10).cast("long")
         % F.lit(MINHASH_PRIME)
     )
-    sigs = _persist(
+    sigs = persist(
         sh.select("doc_id", sid.alias("sid"))
         .groupBy("doc_id")
         .agg(
@@ -2971,7 +2866,7 @@ def minhash_band_sweep(
             ]
         )
     )
-    truth = _persist(
+    truth = persist(
         dedup_ngram_jaccard(documents, threshold)
         .select("doc_a", "doc_b")
         .withColumn("_true", F.lit(1))
@@ -3088,7 +2983,7 @@ def dedup_winnow_incremental(
     """
     from inde1_spark.operators.text import hash_bucket, winnow_fp_table
 
-    fp = _persist(winnow_fp_table(documents))
+    fp = persist(winnow_fp_table(documents))
     is_batch = hash_bucket(F.col("doc_id"), 100) < batch_pct
     split = documents.select("doc_id", is_batch.alias("is_batch"))
     batch_ids = split.filter(F.col("is_batch")).select("doc_id")
@@ -3256,10 +3151,10 @@ def graph_modularity_audit(
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    edges = _persist(
+    edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
-    labels = _persist(lpa_labels(edges, rounds))
+    labels = persist(lpa_labels(edges, rounds))
     la = labels.select(F.col("u").alias("doc_a"), F.col("label").alias("lab_a"))
     lb = labels.select(F.col("u").alias("doc_b"), F.col("label").alias("lab_b"))
     tagged = edges.join(la, "doc_a").join(lb, "doc_b")
@@ -3452,7 +3347,7 @@ def minhash_perm_sweep(
         .agg(F.count("*").cast("long").alias("n_inter"))
     )
     union = F.col("sz_a") + F.col("sz_b") - F.col("n_inter")
-    pairs = _persist(
+    pairs = persist(
         cand.join(sa, "doc_a")
         .join(sb, "doc_b")
         .select("doc_a", "doc_b", *match_cols)
@@ -3520,7 +3415,7 @@ def keep_policy_audit(documents: DataFrame) -> DataFrame:
     from inde1_spark.operators.text import quality_score
 
     q = quality_score(documents).select("doc_id", "n_tokens", "quality")
-    members = _persist(
+    members = persist(
         dedup_clusters(documents).join(q, "doc_id").select(
             "cluster_id",
             "doc_id",
@@ -3595,7 +3490,7 @@ def hash_width_audit(documents: DataFrame) -> DataFrame:
     """
     from inde1_spark.functions.exprs import dec_ratio_round
 
-    full = _persist(
+    full = persist(
         documents.select(F.md5("text").alias("h")).distinct()
     )
     aggs = [F.count("*").cast("long").alias("n_keys")]

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from inde1_spark.functions.exprs import tokens
+from inde1_spark.plans.lifecycle import persist
 
 LOG_SCALE = 1_000_000_000  # ln() snapped to nano precision
 TFIDF_TOP_K = 5
@@ -79,11 +80,9 @@ def shared_term_freq(documents: DataFrame) -> DataFrame:
     default inside the operators: a single-query plan pays the cache
     build/serialization and never reuses it (unigram_logprob regressed 16%
     the round an unconditional persist landed — r03 verdict). Release via
-    dedup.release_persisted().
+    lifecycle.release_persisted().
     """
-    from inde1_spark.operators.dedup import _persist
-
-    return _persist(_term_freq(documents))
+    return persist(_term_freq(documents))
 
 
 def tfidf_top_terms(
@@ -308,10 +307,8 @@ def term_cooccurrence(documents: DataFrame, k: int = COOC_TOP_K) -> DataFrame:
         F.md5(F.col("term")).asc(), F.col("term").asc()
     )
     # persisted: kept feeds BOTH sides of the pair self-join below — without
-    # it the tokenize/df/cap pipeline runs twice (dedup.py registry pattern)
-    from inde1_spark.operators.dedup import _persist
-
-    kept = _persist(
+    # it the tokenize/df/cap pipeline runs twice
+    kept = persist(
         kept.withColumn("r", F.row_number().over(w)).filter(
             F.col("r") <= COOC_DOC_CAP
         )
@@ -358,9 +355,8 @@ def vocab_coverage(documents: DataFrame, k: int = VOCAB_TOP_K) -> DataFrame:
     one audit row; coverage is an exact integer ratio.
     """
     from inde1_spark.functions.exprs import ratio_round
-    from inde1_spark.operators.dedup import _persist
 
-    counts = _persist(
+    counts = persist(
         documents.select(F.explode(tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("long").alias("n_occ"))
@@ -811,12 +807,10 @@ def cross_source_perplexity(documents: DataFrame) -> DataFrame:
     Arithmetic: nano-snapped logs, wide-decimal products and floor-div —
     exact in both engines.
     """
-    from inde1_spark.operators.dedup import _persist
-
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    st = _persist(
+    st = persist(
         documents.select("source", F.explode(tokens("text")).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").cast("long").alias("c"))
@@ -904,9 +898,7 @@ def impact_postings(
     SQL. Ties broken by doc_id; one persisted corpus frequency pass
     feeds both the ranking and the df/cf sidecar.
     """
-    from inde1_spark.operators.dedup import _persist
-
-    tf = _persist(
+    tf = persist(
         _term_freq(documents).select("term", "doc_id", "tf")
     )
     stats = tf.groupBy("term").agg(
@@ -975,12 +967,10 @@ def jsd_sources(documents: DataFrame) -> DataFrame:
 
     from inde1_spark.functions.exprs import dec_to_double_exact
 
-    from inde1_spark.operators.dedup import _persist
-
     # persisted: the (source, term) count table feeds the totals agg and
     # BOTH sides of the pair self-join — without it each consumer replays
     # the corpus tokenize+explode
-    terms = _persist(
+    terms = persist(
         documents.select("source", F.explode(tokens("text")).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").cast("long").alias("c"))
@@ -1073,8 +1063,6 @@ def dirichlet_query_likelihood(
     only query-term postings; everything else is row-local over one
     corpus pass + a TakeOrdered top-k.
     """
-    from inde1_spark.operators.dedup import _persist
-
     def lnn(c):
         return F.round(F.log(c.cast("double")) * F.lit(1e9), 0).cast("long")
 
@@ -1085,7 +1073,7 @@ def dirichlet_query_likelihood(
     )
     ntot = dl.agg(F.sum("dlen").cast("long").alias("n_tok"))
     qtoks = toks.filter(F.col("term").isin(qlist))
-    cq = _persist(
+    cq = persist(
         qtoks.groupBy("term").agg(F.count("*").cast("long").alias("c_q"))
     )
     const = cq.join(F.broadcast(ntot)).agg(
@@ -1348,8 +1336,6 @@ def jm_query_likelihood(
     the |Q|-way doc grid; the scored arithmetic is row-local + a
     TakeOrdered top-k.
     """
-    from inde1_spark.operators.dedup import _persist
-
     def lnn(c):
         return F.round(F.log(c.cast("double")) * F.lit(1e9), 0).cast("long")
 
@@ -1360,7 +1346,7 @@ def jm_query_likelihood(
     ).filter(F.col("dlen") > 0)
     ntot = dl.agg(F.sum("dlen").cast("long").alias("n_tok"))
     qtoks = toks.filter(F.col("term").isin(qlist))
-    cq = _persist(
+    cq = persist(
         qtoks.groupBy("term").agg(F.count("*").cast("long").alias("c_q"))
     )
     dq = qtoks.groupBy("doc_id", "term").agg(
@@ -1422,12 +1408,11 @@ def morisita_horn_overlap(documents: DataFrame) -> DataFrame:
     count, a vocabulary-volume self-equi-join, bounded source fan-out.
     """
     from inde1_spark.functions.exprs import dec_to_double_exact
-    from inde1_spark.operators.dedup import _persist
 
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    terms = _persist(
+    terms = persist(
         documents.select("source", F.explode(tokens("text")).alias("term"))
         .groupBy("source", "term")
         .agg(F.count("*").cast("long").alias("c"))
@@ -1614,10 +1599,8 @@ def bm25_parameter_sweep(
     neither engine does decimal-literal arithmetic (CLAUDE.md
     float-literal rule). The mean divides one exact LONG sum, once.
     """
-    from inde1_spark.operators.dedup import _persist
-
-    tf = _persist(_term_freq(documents, only_terms=query))
-    stats = _persist(
+    tf = persist(_term_freq(documents, only_terms=query))
+    stats = persist(
         documents.agg(
             F.count("*").cast("double").alias("n_docs"),
             (
@@ -1626,7 +1609,7 @@ def bm25_parameter_sweep(
             ).alias("avgdl"),
         )
     )
-    df_tbl = _persist(
+    df_tbl = persist(
         tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
     )
     idf = _log_scaled(
@@ -1649,7 +1632,7 @@ def bm25_parameter_sweep(
             0,
         ).cast("long")
 
-    per_doc = _persist(
+    per_doc = persist(
         base.groupBy("doc_id").agg(
             *[
                 F.sum(contrib(k1, b)).cast("long").alias(f"sk_{i}")
@@ -1667,7 +1650,7 @@ def bm25_parameter_sweep(
 
     from inde1_spark.functions.exprs import ratio_round
 
-    default = _persist(
+    default = persist(
         topk(0).select("doc_id", F.lit(1).alias("_in_default"))
     )
     out = None
@@ -1733,12 +1716,11 @@ def lm_order_sweep(documents: DataFrame) -> DataFrame:
         ratio_round,
         word_ngrams,
     )
-    from inde1_spark.operators.dedup import _persist
     from inde1_spark.operators.text import hash_bucket
 
     d38 = "decimal(38,0)"
     is_train = hash_bucket(F.col("doc_id"), 100) < LM_SWEEP_TRAIN_PCT
-    base = _persist(
+    base = persist(
         documents.select(is_train.alias("tr"), tokens("text").alias("toks"))
     )
     uni = (

@@ -28,6 +28,7 @@ from inde1_spark.functions.exprs import (
     norm_exact,
     ratio_round,
 )
+from inde1_spark.plans.lifecycle import persist, spread
 
 N_QUERIES = 20  # queries() uses vec_id < 20 as the query set
 EMB_DIM = 64    # testdata embedding width (shared with oracles.EMB_DIM)
@@ -36,25 +37,8 @@ K_BUCKETED = 3
 LSH_SIGN_DIMS = 4  # 2^4 = 16 buckets
 
 
-def _spread(embeddings: DataFrame) -> DataFrame:
-    """vec_id-keyed re-spread at an EXPLICIT partition count.
-
-    Vector math is CPU-bound; a single-file corpus must not pin the
-    dot-product loops to one core (see dedup.shingle_table). The explicit
-    COUNT matters (r12, CLAUDE.md rule): embeddings are tiny in BYTES, so
-    AQE's byte-based coalescing folded the keyed-only ``repartition``
-    back to ONE partition and every downstream decimal fold (norms, ADC
-    scans, cosine verifies) ran single-threaded — knn_brute_cosine
-    measured 13 consecutive 1-task stages before this.
-    """
-    n_part = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    return embeddings.repartition(n_part, "vec_id")
-
-
 def _with_norm(embeddings: DataFrame) -> DataFrame:
-    return _spread(embeddings).select(
+    return spread(embeddings, "vec_id").select(
         "vec_id", "embedding", norm_exact(F.col("embedding")).alias("nrm")
     )
 
@@ -245,7 +229,7 @@ def knn_lsh_bucketed(
     # COUNT — CLAUDE.md rule), so verification runs at full parallelism
     # and each embedding payload moves once, keyed by its own id (§8:
     # shuffle keys and metadata, attach the heavy bytes last).
-    ids = _spread(embeddings).select(
+    ids = spread(embeddings, "vec_id").select(
         "vec_id", sign_bucket(F.col("embedding"), dims).alias("bucket")
     )
     q_ids = ids.filter(F.col("vec_id") < n_queries)
@@ -257,14 +241,12 @@ def knn_lsh_bucketed(
     else:
         q_ids = q_ids.select(F.col("vec_id").alias("query_id"), "bucket")
     n_ids = ids.select(F.col("vec_id").alias("neighbor_id"), "bucket")
-    n_part = int(
-        embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    cand = (
+    cand = spread(
         q_ids.join(n_ids, "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .repartition(n_part, "query_id", "neighbor_id")
+        .select("query_id", "neighbor_id"),
+        "query_id",
+        "neighbor_id",
     )
     e = _with_norm(embeddings)
     eq = e.select(
@@ -708,7 +690,7 @@ def embedding_random_projection(
             ).alias("s"),
         )
     )
-    vecs = _spread(embeddings).select("vec_id", fx.alias("fx"))
+    vecs = spread(embeddings, "vec_id").select("vec_id", fx.alias("fx"))
     proj = vecs.join(F.broadcast(signs)).select(
         "vec_id",
         "proj_dim",
@@ -787,7 +769,7 @@ def knn_two_stage(
         ).alias("smat")
     )
     with_fx = (
-        _spread(embeddings)
+        spread(embeddings, "vec_id")
         .select("vec_id", "embedding", fx.alias("fx"))
         .crossJoin(F.broadcast(smat_df))
     )
@@ -921,7 +903,6 @@ def embedding_top_component(
             v.cast("double") * F.lit(PI_MOMENT_SCALE) + F.lit(0.5)
         ).cast("long"),
     )
-    from inde1_spark.operators.dedup import _persist
 
     if moments == "join":
         # pair moments via a co-partitioned SELF-JOIN of the exploded
@@ -939,8 +920,8 @@ def embedding_top_component(
         # CPU, is the binding constraint) pass moments="hof" to flip to
         # the row-local spelling; both paths produce identical moments
         # (pinned by tests/test_similarity_recall.py).
-        ex = _persist(
-            _spread(embeddings)
+        ex = persist(
+            spread(embeddings, "vec_id")
             .select("vec_id", fx.alias("fx"))
             .select("vec_id", F.posexplode("fx").alias("dim0", "x"))
             .select("vec_id", (F.col("dim0") + 1).alias("i"), "x")
@@ -964,7 +945,7 @@ def embedding_top_component(
         # zero corpus-side shuffle, d^2/2 interpreted struct builds per row.
         # Same LONG products, same decimal promotion at the sum — moments
         # are bit-identical to the join path.
-        emb_fx = _spread(embeddings).select(fx.alias("fx"))
+        emb_fx = spread(embeddings, "vec_id").select(fx.alias("fx"))
         dd = F.size(F.col("fx"))
         pair_structs = F.flatten(
             F.transform(
@@ -999,7 +980,7 @@ def embedding_top_component(
     # the moment tables are tiny (d / d*(d-1)/2 rows) but feed 4+ plan
     # branches each; the persists keep every branch reading the computed
     # tables instead of re-expanding back to the scan
-    dims = _persist(
+    dims = persist(
         dim_src.groupBy("dim")
         .agg(
             F.count("*").cast("long").alias("n_d"),
@@ -1023,7 +1004,7 @@ def embedding_top_component(
             ),
         )
     )
-    offd = _persist(offd)
+    offd = persist(offd)
     mirror = offd.select(F.col("j").alias("i"), F.col("i").alias("j"), "v")
     ndd = F.col("n_d").cast("decimal(38,0)")
     diag_dec = (ndd * F.col("sxx") - F.col("sx") * F.col("sx")).alias("vd")
@@ -1286,7 +1267,7 @@ def knn_pq(
             )
         )["c"],
     )
-    enc = _spread(embeddings).join(F.broadcast(cb)).select(
+    enc = spread(embeddings, "vec_id").join(F.broadcast(cb)).select(
         F.col("vec_id").alias("neighbor_id"), codes.alias("codes")
     )
     # query-side exact distance table: dt[m][c] (longs)
@@ -1346,9 +1327,7 @@ def ann_paths_recall(embeddings: DataFrame, k: int = K_BUCKETED) -> DataFrame:
     each method contributes a bounded top-k table and one tiny equi-join.
     The expensive parts are the audited operators themselves.
     """
-    from inde1_spark.operators.dedup import _persist
-
-    truth = _persist(
+    truth = persist(
         knn_brute_cosine(embeddings, k=k).select("query_id", "neighbor_id")
     )
     methods = [
@@ -1402,9 +1381,7 @@ def mutual_nearest_neighbors(
     (exact-decimal dot is direction-independent), so the pair is emitted
     once with vec_a < vec_b.
     """
-    from inde1_spark.operators.dedup import _persist
-
-    nn = _persist(
+    nn = persist(
         knn_lsh_bucketed(embeddings, k=1, n_queries=2**62, dims=dims).select(
             F.col("query_id").alias("vec_a"),
             F.col("neighbor_id").alias("vec_b"),
@@ -1521,10 +1498,8 @@ def knn_mmr_rerank(
     — no integer division, so the Spark-truncates / DuckDB-floors
     negative-division asymmetry can never bite.
     """
-    from inde1_spark.operators.dedup import _persist
-
     micro = lambda c: F.round(c * F.lit(1e6), 0).cast("long")  # noqa: E731
-    cands = _persist(
+    cands = persist(
         knn_lsh_bucketed(embeddings, k=pool).select(
             "query_id", "neighbor_id", micro(F.col("cos_sim")).alias("rel")
         )
@@ -1552,7 +1527,7 @@ def knn_mmr_rerank(
             "nb",
         )
     )
-    psim = _persist(
+    psim = persist(
         _cosine(pairs).select(
             "query_id", "na", "nb", micro(F.col("cos_sim")).alias("sim")
         )
@@ -1599,7 +1574,10 @@ def knn_mmr_rerank(
             f"array_contains(array({sel}), p.nb)), p -> p.sim))"
         )
 
-    # rank r: min struct(-(7*rel - 3*red), nid) over the remaining pool
+    # rank r: min struct(-(7*rel - 3*red), nid) over the remaining pool.
+    # red is computed once per candidate in an inner transform and read
+    # back as a struct field: HOF lambdas get no CSE, so interpolating it
+    # twice would run the O(pool^2) sim_arr scan twice.
     for r in range(2, k + 1):
         prev = [f"p{i}.nid" for i in range(1, r)]
         not_sel = " AND ".join(f"c.nid != {p}" for p in prev)
@@ -1607,10 +1585,11 @@ def knn_mmr_rerank(
         g = g.withColumn(
             f"p{r}",
             F.expr(
-                f"array_min(transform(filter(pool_arr, c -> {not_sel}), "
+                f"array_min(transform(transform(filter(pool_arr, "
+                f"c -> {not_sel}), c -> struct(c.nid AS nid, c.rel AS rel, "
+                f"coalesce({red}, 0L) AS red)), "
                 f"c -> struct(-({MMR_NUM} * c.rel - {MMR_DEN - MMR_NUM} * "
-                f"coalesce({red}, 0L)) AS nscore, c.nid AS nid, c.rel AS rel, "
-                f"coalesce({red}, 0L) AS red)))"
+                f"c.red) AS nscore, c.nid AS nid, c.rel AS rel, c.red AS red)))"
             ),
         )
     rows = ", ".join(
@@ -1742,7 +1721,7 @@ def knn_ivf_pq(
         )["c"],
     )
     enc = (
-        _spread(embeddings)
+        spread(embeddings, "vec_id")
         .join(F.broadcast(cb))
         .select(
             F.col("vec_id").alias("neighbor_id"), F.col("label"), codes.alias("codes")
@@ -2042,7 +2021,7 @@ def embedding_cka(embeddings: DataFrame, half: int = CKA_HALF) -> DataFrame:
     def d38(c):
         return c.cast("decimal(38,0)")
 
-    base = _spread(embeddings).select("vec_id", "embedding")
+    base = spread(embeddings, "vec_id").select("vec_id", "embedding")
     ex = base.select(
         "vec_id", F.posexplode(F.slice("embedding", 1, half)).alias("i", "x")
     )
@@ -2163,9 +2142,7 @@ def ivf_nprobe_sweep(
     """
     from functools import reduce
 
-    from inde1_spark.operators.dedup import _persist
-
-    truth = _persist(
+    truth = persist(
         knn_brute_cosine(embeddings, k=k).select("query_id", "neighbor_id")
     )
     outs = []

@@ -17,6 +17,7 @@ from inde1_spark.functions.exprs import (
     tokens,
     word_ngrams,
 )
+from inde1_spark.plans.lifecycle import lazy_checkpoint, persist, spread
 
 # Marker-token lists for the n-gram/stopword language heuristic. The corpus
 # vocabulary is synthetic, so the lists are assigned from it; with real text
@@ -775,11 +776,9 @@ def doc_knn_hashed(
     are exact integer sums; norms are sqrt of exact integers; ties break
     by neighbor id.
     """
-    from inde1_spark.operators.dedup import _persist
-
     # three consumers (norms + both join sides): persist or each re-runs
     # the tokenize/explode/aggregate pipeline from the scan
-    base = _persist(hash_vectorize(documents, dims).select("doc_id", "dim", "val"))
+    base = persist(hash_vectorize(documents, dims).select("doc_id", "dim", "val"))
     norms = base.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("val") * F.col("val")).cast("double")).alias("nrm")
     )
@@ -1104,8 +1103,6 @@ def keyword_textrank(
     ever exceeds ~1e9 co-occurrences), and the damping update re-derives
     the same long from the same IEEE doubles in both engines.
     """
-    from inde1_spark.operators.dedup import _lazy_checkpoint, _persist
-
     toksc = F.filter(tokens("text"), lambda t: F.length(t) >= min_len)
     docs = documents.select("doc_id", toksc.alias("toks"))
     sz = F.size(F.col("toks"))
@@ -1143,7 +1140,7 @@ def keyword_textrank(
     canon = pairs.groupBy(
         F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
     ).agg(F.count("*").cast("long").alias("w"))
-    edges = _persist(
+    edges = persist(
         canon.select("u", "v", "w")
         .union(canon.select(F.col("v").alias("u"), F.col("u").alias("v"), "w"))
         .join(
@@ -1175,7 +1172,7 @@ def keyword_textrank(
             F.col("v").alias("u"), F.expr("(r_nano * w) div wout").alias("c")
         )
         s = contrib.groupBy("u").agg(F.sum("c").cast("long").alias("s_nano"))
-        rank = _lazy_checkpoint(
+        rank = lazy_checkpoint(
             rank.join(s, "u", "left").selectExpr(
                 "u", "wout", "n_nodes", upd_sql
             ),
@@ -1229,13 +1226,12 @@ def symspell_neighbors(
         .agg(F.count("*").cast("long").alias("n"))
         .filter(F.length("term") <= SYMSPELL_MAX_LEN)
     )
-    from inde1_spark.operators.dedup import _persist
 
     term = F.col("term")
     # three consumers (hot-key counts + both join sides) would each re-run
     # the corpus vocab pass — persist the tiny vocab-x-length key table so
     # the corpus is scanned once
-    keys = _persist(vocab.select(
+    keys = persist(vocab.select(
         "term",
         "n",
         F.explode(
@@ -1265,11 +1261,8 @@ def symspell_neighbors(
     # explicit partition COUNT before the exact verify (CLAUDE.md rule):
     # the candidate table is a few KB, so AQE's byte-based coalescing
     # would run every levenshtein on one core at real-vocab scale
-    n_part = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
     return (
-        cand.repartition(n_part, "term_a", "term_b")
+        spread(cand, "term_a", "term_b")
         .filter(F.levenshtein("term_a", "term_b") <= 1)
         .orderBy("term_a", "term_b")
     )
@@ -1347,12 +1340,11 @@ def word_link_prediction(
     edges_w = edges_w.withColumn(
         "n_edges", F.count("*").over(wg).cast("decimal(38,0)")
     )
-    from inde1_spark.operators.dedup import _persist
 
     # persisted: the bounded kept-edge table is consumed four times (degrees,
     # both wedge sides, the anti-join) — without it each consumer replays the
     # corpus-wide pair explode
-    kept = _persist(
+    kept = persist(
         edges_w.filter(
             F.col("w").cast("decimal(38,0)") * F.col("n_edges") >= F.col("sum_w")
         ).select("u", "v")

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from inde1_spark.operators.text import _split_label, gopher_keep, hash_bucket
+from inde1_spark.plans.lifecycle import lazy_checkpoint, release_persisted
 
 # Wire schema for the document firehose: the batch `documents` table plus
 # the ingest event-time stamp the connector assigns at capture.
@@ -337,8 +338,6 @@ def lpa_batch_sink(state_dir: str, out_dir: str):
             # lpa_labels caches its v-partitioned adjacency internally
             # (r12); release it per micro-batch or availableNow backfills
             # accumulate one stale cache per batch
-            from inde1_spark.operators.dedup import release_persisted
-
             release_persisted()
 
     return _apply
@@ -413,10 +412,7 @@ def embedding_admission_stream(
         _init_centroids,
         _update,
     )
-    from inde1_spark.operators.dedup import (
-        COSINE_DEDUP_THRESHOLD,
-        _lazy_checkpoint,
-    )
+    from inde1_spark.operators.dedup import COSINE_DEDUP_THRESHOLD
 
     kk = KMEANS_K if k is None else k
     it = KMEANS_ITERS if iters is None else iters
@@ -426,7 +422,7 @@ def embedding_admission_stream(
     cents = _init_centroids(index, kk)
     for _ in range(it):
         cents = _update(_assign(index, cents))
-    cents = _lazy_checkpoint(cents, bounded=True)
+    cents = lazy_checkpoint(cents, bounded=True)
     members = _assign(index, cents).select(
         "cluster",
         F.col("vec_id").alias("vec_idx"),

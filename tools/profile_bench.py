@@ -34,7 +34,7 @@ def main() -> None:
 
     import __spark_entry__ as entry_mod
     from bench import HEADLINE
-    from inde1_spark.operators.dedup import release_persisted
+    from inde1_spark.plans.lifecycle import release_persisted
 
     spark = get_spark(app_name="inde1-profile")
     spark.sparkContext.setLogLevel("ERROR")
