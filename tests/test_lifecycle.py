@@ -3,8 +3,9 @@
 ``lazy_checkpoint(bounded=True)`` flips two session confs around the
 plan->RDD conversion and must hand them back unchanged, also when the
 checkpoint raises. ``spread`` must fix its repartition at the session's
-shuffle width when it is called. Every test here builds plans only: the
-job group fixture fails any test that fires a Spark job.
+shuffle width when it is called, and that width is one partition per core
+unless the deployment sets it. Every test here builds plans only: the job
+group fixture fails any test that fires a Spark job.
 """
 
 from __future__ import annotations
@@ -95,3 +96,11 @@ def test_spread_fixes_the_width_it_was_built_with(session, width):
         rf"hashpartitioning\(a#\d+L?, b#\d+L?, {width}\), REPARTITION_BY_NUM",
         plan,
     ), plan
+
+
+@pytest.mark.skipif(
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS" in os.environ,
+    reason="the env var sets the session's shuffle width",
+)
+def test_session_width_is_one_partition_per_core(session):
+    assert session.conf.get(WIDTH) == str(session.sparkContext.defaultParallelism)

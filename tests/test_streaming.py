@@ -1312,3 +1312,71 @@ def test_backlog_and_ttl_streams_restart_from_checkpoint(spark, tmp_path):
     second = drain(lambda s: ttl_refetch_stream(s, ttl_s=60), tdir, tckpt)
     # the checkpointed last-touch makes this a refetch, not a compulsory
     assert [(r["kind"], r["gap_s"]) for r in second] == [("refetch", 100)]
+
+
+def test_window_stream_restarts_at_the_checkpointed_width(spark, tmp_path):
+    """A stateful stream keeps the shuffle width of its first checkpoint:
+    a window drain written at width 32 restarts at 32 under a session of
+    any other width, reads its state back and still totals like batch."""
+    events, _, _ = to_spark(spark, FIXTURE)
+    times = sorted(e["ts"].replace(tzinfo=None) for e in FIXTURE.events)
+    cut = times[len(times) // 2]
+    data_dir, ckpt = tmp_path / "data", tmp_path / "ckpt"
+    data_dir.mkdir()
+    width = "spark.sql.shuffle.partitions"
+
+    def drain(at_width=None):
+        got: dict = {}
+
+        def keep(df, _id):
+            for r in df.collect():
+                got[(r["window_start"], r["parking_lot_id"])] = (
+                    r["nbr_entries"], r["nbr_exit"], r["occupancy"])
+
+        stream = (
+            spark.readStream.schema(PARKING_EVENT_FLAT)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(data_dir))
+        )
+        writer = (
+            windowed_stats_stream(stream)
+            .writeStream.outputMode("update")
+            .foreachBatch(keep)
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+        )
+        saved = spark.conf.get(width)
+        if at_width is not None:
+            spark.conf.set(width, str(at_width))
+        try:
+            q = writer.start()  # the query clones the session conf here
+        finally:
+            spark.conf.set(width, saved)
+        q.awaitTermination(300)
+        assert q.exception() is None
+        return got, [p for p in q.recentProgress if p["numInputRows"] > 0]
+
+    def write(i, part):
+        (data_dir / f"part-{i}.json").write_text(
+            "\n".join(events.filter(part).toJSON().collect())
+        )
+
+    # file 1 holds the events before the cut and file 2 the rest, so no
+    # event of file 2 falls behind file 1's watermark
+    write(0, F.col("ts") < cut)
+    first, _ = drain(at_width=32)
+    write(1, F.col("ts") >= cut)
+    second, progress = drain()
+
+    assert progress
+    assert progress[0]["stateOperators"][0]["numShufflePartitions"] == 32
+    # the window around the cut was updated on both sides of the restart
+    assert first.keys() & second.keys()
+    want = {
+        (r["window_start"], r["parking_lot_id"]):
+            (r["nbr_entries"], r["nbr_exit"], r["occupancy"])
+        for r in windowed_stats_stream(
+            spark.read.schema(PARKING_EVENT_FLAT).json(str(data_dir))
+        ).collect()
+    }
+    assert {**first, **second} == want

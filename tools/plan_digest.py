@@ -18,12 +18,20 @@ cores. Never run it beside pytest or a benchmark.
 
 Compare only dumps taken with the same ``SPARK_GRAFT_CPUS``: scan-parallel
 loads (``Repartition <cores>``), ``Range`` splits and adaptive stage ids in
-checkpointed plans follow the core count.
+checkpointed plans follow the core count, and so does the session's shuffle
+width (one partition per core unless ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` sets
+it), which sizes every ``spread`` and the exchanges inside checkpointed
+plans. Each dump records both under the ``_session`` key, and ``--diff``
+warns when they differ.
 
 Known unstable entries: ``cdc_chunk_stats``, ``cross_source_dup_matrix``,
 ``state_size_profile`` and ``retention_policy_sweep`` differ between two
 fresh processes on the same commit. In each, Spark's distinct-aggregate
 rewrite emits the ``Expand`` projections in a different order per run.
+``coverage_select`` does too: its checkpointed rounds keep their executed
+adaptive plans, and how many query stages adaptive execution creates
+before it finds a round's relation empty (so the stage and codegen ids)
+varies per run.
 ``--diff`` lists them apart; compare those through their deep parity tests
 (``SPARK_GRAFT_DEEP=1 python -m pytest tests/test_oracle_parity.py
 tests/test_staged_parity.py -k <name>``) instead.
@@ -45,7 +53,10 @@ UNSTABLE = (
     "cross_source_dup_matrix",
     "state_size_profile",
     "retention_policy_sweep",
+    "coverage_select",
 )
+
+SESSION = "_session"
 
 _NORMALIZE = (
     (re.compile(r"#\d+L?"), "#N"),
@@ -73,7 +84,10 @@ def dump(out_path: str, sf_dir: str) -> None:
         **entry_mod.staged_queries(),
         **entry_mod.test_only_queries(),
     }
-    plans: dict[str, str] = {}
+    plans: dict = {SESSION: {
+        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+    }}
     for name, fn in registry.items():
         df = fn(spark, sf_dir)
         plans[name] = normalize(df._jdf.queryExecution().optimizedPlan().toString())
@@ -82,7 +96,7 @@ def dump(out_path: str, sf_dir: str) -> None:
     spark.stop()
     with open(out_path, "w") as f:
         json.dump(plans, f, indent=1, sort_keys=True)
-    print(f"{len(plans)} plans -> {out_path}")
+    print(f"{len(plans) - 1} plans -> {out_path}")
 
 
 def diff(a_path: str, b_path: str) -> int:
@@ -90,6 +104,9 @@ def diff(a_path: str, b_path: str) -> int:
         a = json.load(f)
     with open(b_path) as f:
         b = json.load(f)
+    sa, sb = a.pop(SESSION, None), b.pop(SESSION, None)
+    if sa != sb:
+        print(f"warning: session settings differ: {a_path} {sa}, {b_path} {sb}")
     only_a, only_b = sorted(a.keys() - b.keys()), sorted(b.keys() - a.keys())
     changed = sorted(k for k in a.keys() & b.keys() if a[k] != b[k])
     stable = [k for k in changed if k not in UNSTABLE]
