@@ -7,6 +7,11 @@ timestamps, total orderings. Shared constants (LSH permutations, thresholds,
 marker lists) are imported from the operator modules so the two sides cannot
 drift.
 
+``ORACLES`` is the one twin dict for every surface: production, staged and
+test-only. It says nothing of a query's surface. ``__spark_entry__`` reads
+that from the query's record and filters ``ORACLES`` by it, so a promotion
+leaves this file alone.
+
 Engine-portability notes encoded here:
 - DuckDB SUM(INTEGER) returns HUGEINT -> always CAST to BIGINT;
 - DuckDB CAST(double AS INT) rounds while Spark truncates -> use // or floor;
@@ -3152,17 +3157,6 @@ SELECT s.batch, s.n_shingles_seen,
        {_rr("COALESCE(n.n_shingles_novel, 0)", "s.n_shingles_seen", 4)} AS novelty
 FROM seen s LEFT JOIN novel n ON n.batch = s.batch
 """
-
-
-# Bit-reproducible twins of the scale-path dedups: test infrastructure
-# (single-task dictionary sort / cartesian by construction), kept OUT of
-# the production oracle registry and pinned by the parity tests via
-# __spark_entry__.test_only_queries().
-TEST_ONLY_ORACLES = {
-    k: ORACLES.pop(k)
-    for k in ("dedup_minhash_oracle", "dedup_simhash_oracle", "dedup_embedding_oracle")
-}
-
 
 
 ORACLES["value_percentile_ranks"] = f"""
@@ -10772,15 +10766,12 @@ FROM calc, med
 
 
 # ===========================================================================
-# r09 batch: implemented + twinned in r08 behind the staged surface,
-# PROMOTED into ORACLES (and the head of queries()) with the r09 window
-# rotation; the r10 and r11 batches below likewise promoted with their
-# rounds' rotations. STAGED_ORACLES now accumulates the r12 batch — twins
-# live here until their operators promote; tests/test_staged_parity.py
-# pins them on every run meanwhile.
+# r09 batch onwards: each batch was twinned here while its operators sat on
+# the staged surface, and its operators promoted with their round's window
+# rotation. The twins from the r12 batch on still belong to staged
+# operators; which surface a twin serves is read from its query's record in
+# __spark_entry__, so a promotion never moves a twin.
 # ===========================================================================
-
-STAGED_ORACLES: dict[str, str] = {}
 
 from inde1_spark.operators.analytics import (  # noqa: E402
     KM_CHURN_GAP_DAYS as _NA_GAP,
@@ -12531,7 +12522,7 @@ def _rhu_micro_sql(num: str, den: str) -> str:
     )
 
 
-STAGED_ORACLES["jonckheere_terpstra_trend"] = f"""
+ORACLES["jonckheere_terpstra_trend"] = f"""
 WITH raw AS (
   SELECT CAST(hour(ts) AS BIGINT) // {JT_GROUP_HOURS} AS g,
          CAST(floor(CAST(value AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS y
@@ -12612,7 +12603,7 @@ FROM vm
 WHERE k_groups > 1 AND n_total > k_groups AND var_micro > 0
 """
 
-STAGED_ORACLES["mantel_haenszel_or"] = f"""
+ORACLES["mantel_haenszel_or"] = f"""
 WITH base AS (
   SELECT {_DAY} AS day,
          hour(ts) >= {MH_EXPOSURE_HOUR} AS exposed,
@@ -12647,7 +12638,7 @@ SELECT n_strata,
 FROM s WHERE s_num > 0 AND s_den > 0
 """
 
-STAGED_ORACLES["range_partition_plan"] = f"""
+ORACLES["range_partition_plan"] = f"""
 WITH hist AS MATERIALIZED (
   SELECT CAST(floor(CAST(value AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS v,
          CAST(COUNT(*) AS BIGINT) AS cnt
@@ -12740,7 +12731,7 @@ _JSE_SIDES, _JSE_BODIES = zip(
     *[_jse_join_sql(n, lt, lk, rt, rk) for n, lt, lk, rt, rk in _JSE_JOINS]
 )
 
-STAGED_ORACLES["join_size_estimate_audit"] = f"""
+ORACLES["join_size_estimate_audit"] = f"""
 WITH {",".join(_JSE_SIDES)}
 {chr(10).join(f"{'' if i == 0 else 'UNION ALL' + chr(10)}{b}" for i, b in enumerate(_JSE_BODIES))}
 ORDER BY join_name
@@ -12757,7 +12748,7 @@ _CAL_SMAX = "GREATEST(" + ", ".join(
 ) + ")"
 _CAL_STOT = " + ".join(f"score_{lang}" for lang in sorted(LANG_MARKERS))
 
-STAGED_ORACLES["langid_calibration_audit"] = f"""
+ORACLES["langid_calibration_audit"] = f"""
 WITH toks AS (
   SELECT doc_id, lang, list_filter(string_split(text, ' '), t -> t <> '') AS toks
   FROM documents
@@ -12829,7 +12820,7 @@ labels_{r} AS MATERIALIZED (
 # Twin of operators/dedup.py:graph_modularity_audit — the exact LPA unroll
 # the production operator ships, then Newman Q over the common denominator
 # 4m^2 in HUGEINT with ONE sign-split micro-round.
-STAGED_ORACLES["graph_modularity_audit"] = f"""
+ORACLES["graph_modularity_audit"] = f"""
 WITH {_lpa_label_ctes(LPA_ROUNDS)}
 m_tbl AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
 tagged AS (
@@ -12914,7 +12905,7 @@ _BM25_SWEEP_ROWS = "\nUNION ALL\n".join(
     for i, (k1, b) in enumerate(BM25_SWEEP_CONFIGS)
 )
 
-STAGED_ORACLES["bm25_parameter_sweep"] = f"""
+ORACLES["bm25_parameter_sweep"] = f"""
 WITH {_TF.format(tok_filter=f'WHERE tok IN ({_QTERMS})')},
 stats AS (
   SELECT CAST(count(*) AS DOUBLE) AS n_docs,
@@ -12953,7 +12944,7 @@ FROM agg"""
 
 # Twin of operators/analytics.py:session_gap_sweep — one lag pass over the
 # (user, ts, event_id) order, bounded grid unrolled into conditional sums.
-STAGED_ORACLES["session_gap_sweep"] = f"""
+ORACLES["session_gap_sweep"] = f"""
 WITH gaps AS (
   SELECT user_id,
          epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id
@@ -13014,7 +13005,7 @@ FROM agg"""
 # Twin of operators/analytics.py:predicate_selectivity_audit — one
 # aggregate carries every actual count and model input; per-predicate rows
 # are projections; ppm round-half-up in HUGEINT.
-STAGED_ORACLES["predicate_selectivity_audit"] = f"""
+ORACLES["predicate_selectivity_audit"] = f"""
 WITH agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
          CAST(COUNT(DISTINCT event_type) AS BIGINT) AS ndv_type,
@@ -13046,7 +13037,7 @@ from inde1_spark.operators.analytics import (  # noqa: E402
 # Twin of operators/analytics.py:restart_cost_audit — per-day manifest with
 # tz-free in-day offsets (hour/minute/truncated-second, engine-identical on
 # NTZ), bounded age grid, exact integer ceiling for the drain estimate.
-STAGED_ORACLES["restart_cost_audit"] = f"""
+ORACLES["restart_cost_audit"] = f"""
 WITH manifest AS (
   SELECT CAST(date_diff('day', DATE '1970-01-01', date_trunc('day', ts))
               AS BIGINT) AS day,
@@ -13116,7 +13107,7 @@ _BSA_CTES, _BSA_BODIES = zip(*[_bsa_k_sql(k) for k in BACKFILL_SHARDS])
 # Twin of operators/analytics.py:backfill_skew_audit — per-K sequencing
 # within (shard, day), cross-shard skew per (day, seq) slot; truncated
 # epoch seconds (differences cancel tz offsets, session_gap convention).
-STAGED_ORACLES["backfill_skew_audit"] = f"""
+ORACLES["backfill_skew_audit"] = f"""
 WITH bsa_base AS (
   SELECT CAST(date_diff('day', DATE '1970-01-01', date_trunc('day', ts))
               AS BIGINT) AS day,
@@ -13159,7 +13150,7 @@ _FK_EDGES = (
 
 # Twin of operators/analytics.py:fk_integrity_audit — per-edge orphan and
 # coverage counts via NOT EXISTS / EXISTS on key-distinct subqueries.
-STAGED_ORACLES["fk_integrity_audit"] = f"""
+ORACLES["fk_integrity_audit"] = f"""
 WITH raw AS (
 {"UNION ALL".join(_fk_edge_sql(*e) for e in _FK_EDGES)}
 )
@@ -13246,7 +13237,7 @@ _CMS_CTES, _CMS_BODIES = zip(*[_cms_k_sql(a) for a in CDC_MASK_GRID])
 
 # Twin of operators/dedup.py:cdc_mask_sweep — the parameterized CDC chunk
 # fragment per mask width, one per-hash aggregate, one-row rollups.
-STAGED_ORACLES["cdc_mask_sweep"] = f"""
+ORACLES["cdc_mask_sweep"] = f"""
 WITH {",".join(_CMS_CTES)}
 {chr(10).join(f"{'' if i == 0 else 'UNION ALL' + chr(10)}{b}" for i, b in enumerate(_CMS_BODIES))}
 ORDER BY avg_chunk_words
@@ -13255,7 +13246,7 @@ ORDER BY avg_chunk_words
 # Twin of operators/corpus.py:quality_dedup_interaction — quality decile
 # binning (the quality_bins spelling) x md5 dup-group flags; lift in
 # HUGEINT round-half-up, NULL when the corpus has zero redundancy.
-STAGED_ORACLES["quality_dedup_interaction"] = f"""
+ORACLES["quality_dedup_interaction"] = f"""
 WITH {_QUALITY_CTES.format(stop=_STOP_LIST).strip()},
 q AS (
   SELECT doc_id,
@@ -13301,7 +13292,7 @@ FROM per_bin, totals ORDER BY bin
 
 # Twin of operators/analytics.py:event_order_integrity_audit — one global
 # aggregate + one per-user (event_id, ts)-ordered lag pass.
-STAGED_ORACLES["event_order_integrity_audit"] = f"""
+ORACLES["event_order_integrity_audit"] = f"""
 WITH base AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
          CAST(COUNT(*) - COUNT(DISTINCT event_id) AS BIGINT)
@@ -13366,7 +13357,7 @@ def _mps_row_sql(k: int) -> str:
 
 # Twin of operators/dedup.py:minhash_perm_sweep — the est-audit pipeline
 # with per-prefix match counts, one pair table feeding bounded per-k rows.
-STAGED_ORACLES["minhash_perm_sweep"] = f"""
+ORACLES["minhash_perm_sweep"] = f"""
 WITH {_SHINGLES.strip()},
 shid AS (
   SELECT doc_id,
@@ -13425,7 +13416,7 @@ from inde1_spark.operators.dedup import FUNNEL_QUALITY_MIN as _COA_QMIN  # noqa:
 # Twin of operators/corpus.py:curation_order_audit — both keepers from one
 # md5-partition window, one global fold; quality is the funnel's exact
 # 4-decimal cut.
-STAGED_ORACLES["curation_order_audit"] = f"""
+ORACLES["curation_order_audit"] = f"""
 WITH {_QUALITY_CTES.format(stop=_STOP_LIST).strip()},
 q AS (
   SELECT doc_id, n_tokens,
@@ -13476,7 +13467,7 @@ _TNA_PREDS = (
 
 # Twin of operators/text.py:text_normalization_audit — row-local boolean
 # predicates, one per-source aggregate.
-STAGED_ORACLES["text_normalization_audit"] = f"""
+ORACLES["text_normalization_audit"] = f"""
 WITH agg AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          {", ".join(f"CAST(SUM(CASE WHEN {p} THEN 1 ELSE 0 END) AS BIGINT) AS {n}" for n, p in _TNA_PREDS)}
@@ -13525,7 +13516,7 @@ _PDS_CTES, _PDS_BODIES = zip(*[_pds_m_sql(m) for m in PQ_M_GRID])
 
 # Twin of operators/similarity.py:pq_distortion_sweep — the knn_pq
 # codebook/pico-distance spelling, per-vector min distortion per m.
-STAGED_ORACLES["pq_distortion_sweep"] = f"""
+ORACLES["pq_distortion_sweep"] = f"""
 WITH pds_seeds AS (
   SELECT row_number() OVER (ORDER BY vec_id) AS c,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
@@ -13554,7 +13545,7 @@ def _lms_rollup_sql(order: int, held: str, n_train: str) -> str:
 # Twin of operators/scoring.py:lm_order_sweep — one token pass, per-order
 # (split, gram) counts, add-1 smoothing with the train unigram vocabulary,
 # ln snapped to nano longs, HUGEINT accumulation.
-STAGED_ORACLES["lm_order_sweep"] = f"""
+ORACLES["lm_order_sweep"] = f"""
 WITH base AS (
   SELECT ({_hash_bucket_sql('doc_id', 100)} < {LM_SWEEP_TRAIN_PCT}) AS tr,
          list_filter(string_split(text, ' '), t -> t <> '') AS toks
@@ -13629,7 +13620,7 @@ def _kpa_policy_sql(policy: str, keeper: str) -> str:
   FROM joined"""
 
 
-STAGED_ORACLES["keep_policy_audit"] = f"""
+ORACLES["keep_policy_audit"] = f"""
 WITH {_QUALITY_CTES.format(stop=_STOP_LIST).strip()},
 qv AS (
   SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
@@ -13679,7 +13670,7 @@ def _hwa_row_sql(w: int) -> str:
 
 # Twin of operators/dedup.py:hash_width_audit — distinct md5 pass, prefix
 # distinct counts, HUGEINT birthday expectation.
-STAGED_ORACLES["hash_width_audit"] = f"""
+ORACLES["hash_width_audit"] = f"""
 WITH full_h AS (SELECT DISTINCT md5(text) AS h FROM documents),
 agg AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_keys,
@@ -13695,7 +13686,7 @@ from inde1_spark.operators.corpus import CORPUS_SHARDS  # noqa: E402
 # Twin of operators/corpus.py:corpus_shard_plan — single-window cumulative
 # sum (numerically identical to the engine's two-level spelling), HUGEINT
 # shard division, exact fill percents.
-STAGED_ORACLES["corpus_shard_plan"] = f"""
+ORACLES["corpus_shard_plan"] = f"""
 WITH toks AS (
   SELECT doc_id,
          CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
@@ -13731,7 +13722,7 @@ from inde1_spark.operators.analytics import STATE_BYTES_PER_KEY  # noqa: E402
 
 # Twin of operators/analytics.py:state_size_profile — one per-day aggregate
 # with tz-free in-day offsets (the restart_cost_audit convention).
-STAGED_ORACLES["state_size_profile"] = f"""
+ORACLES["state_size_profile"] = f"""
 WITH per_day AS (
   SELECT {_DAY} AS day,
          CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -13766,7 +13757,7 @@ from inde1_spark.operators.analytics import (  # noqa: E402
 # Twin of operators/analytics.py:cache_hit_curve — identical rank order
 # (n DESC, user_id), cumulative frame, grid floor-div sizing, HUGEINT
 # round-half-up percents.
-STAGED_ORACLES["cache_hit_curve"] = f"""
+ORACLES["cache_hit_curve"] = f"""
 WITH freq AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY 1
 ),
@@ -13801,7 +13792,7 @@ ORDER BY cache_pct
 # Twin of operators/analytics.py:allowed_lateness_sweep — per-key running
 # max in (event_id, ts) order over truncated-second epochs, literal delay
 # grid, HUGEINT drop shares.
-STAGED_ORACLES["allowed_lateness_sweep"] = f"""
+ORACLES["allowed_lateness_sweep"] = f"""
 WITH lat AS (
   SELECT MAX(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
            PARTITION BY user_id ORDER BY event_id, ts
@@ -13914,7 +13905,7 @@ ORDER BY p.feature
 """
 
 
-STAGED_ORACLES["blocking_key_sweep"] = _blocking_key_sweep_sql()
+ORACLES["blocking_key_sweep"] = _blocking_key_sweep_sql()
 
 # ===========================================================================
 # r14 batch, second tranche (staged in r11): TTL pricing, trigger sizing,
@@ -13931,7 +13922,7 @@ from inde1_spark.operators.corpus import SEQ_LEN_GRID  # noqa: E402
 
 # Twin of operators/analytics.py:ttl_staleness_sweep — per-key lag in
 # (truncated-second ts, event_id) order, literal TTL grid, HUGEINT shares.
-STAGED_ORACLES["ttl_staleness_sweep"] = f"""
+ORACLES["ttl_staleness_sweep"] = f"""
 WITH g AS (
   SELECT CAST(floor(epoch(ts)) AS BIGINT)
          - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
@@ -13966,7 +13957,7 @@ FROM agg ORDER BY ttl_s
 # Twin of operators/analytics.py:trigger_interval_sweep — tz-free absolute
 # second (day index * 86400 + extracted in-day seconds), floor-div buckets,
 # HUGEINT-promoted peak product.
-STAGED_ORACLES["trigger_interval_sweep"] = f"""
+ORACLES["trigger_interval_sweep"] = f"""
 WITH s AS (
   SELECT CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
               AS BIGINT) * 86400
@@ -14004,7 +13995,7 @@ FROM p ORDER BY trigger_s
 # Twin of operators/corpus.py:truncation_loss_sweep — whitespace token
 # counts (string_split + list_filter, the tokens() convention), literal
 # length grid, HUGEINT shares.
-STAGED_ORACLES["truncation_loss_sweep"] = f"""
+ORACLES["truncation_loss_sweep"] = f"""
 WITH d AS (
   SELECT CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
               AS BIGINT) AS n_tok
@@ -14103,12 +14094,12 @@ FROM per_band ORDER BY band
 """
 
 
-STAGED_ORACLES["lsh_bucket_balance_audit"] = _lsh_bucket_balance_sql()
+ORACLES["lsh_bucket_balance_audit"] = _lsh_bucket_balance_sql()
 
 # Twin of operators/analytics.py:shuffle_width_sweep — md5-prefix reducer
 # assignment with the width grid as a column modulus, HUGEINT-promoted
 # peak product.
-STAGED_ORACLES["shuffle_width_sweep"] = f"""
+ORACLES["shuffle_width_sweep"] = f"""
 WITH counts AS (
   SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM events GROUP BY 1
 ),
@@ -14139,7 +14130,7 @@ FROM per_w ORDER BY width
 
 # Twin of operators/analytics.py:retention_policy_sweep — tz-free day
 # index, 1-row frontier cross join, conditional distincts, HUGEINT shares.
-STAGED_ORACLES["retention_policy_sweep"] = f"""
+ORACLES["retention_policy_sweep"] = f"""
 WITH days AS (
   SELECT CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
               AS BIGINT) AS d,
@@ -14218,11 +14209,11 @@ FROM cols ORDER BY col_name
 """
 
 
-STAGED_ORACLES["column_completeness_audit"] = _column_completeness_sql()
+ORACLES["column_completeness_audit"] = _column_completeness_sql()
 
 # Twin of operators/analytics.py:scan_split_sweep — per-day modeled bytes,
 # exact integer ceil/remainder split math, literal split grid.
-STAGED_ORACLES["scan_split_sweep"] = f"""
+ORACLES["scan_split_sweep"] = f"""
 WITH per_day AS (
   SELECT {_DAY} AS day,
          CAST(COUNT(*) * {COMPACT_ROW_BYTES} AS BIGINT) AS day_bytes
@@ -14260,7 +14251,7 @@ FROM agg ORDER BY split_bytes
 # Twin of operators/analytics.py:rate_limit_sweep — tz-free minute index,
 # per-rate ceil of the scale-free mean-rate grid, Lindley backlog via
 # cumulative-sum and running-min windows over the bounded minute series.
-STAGED_ORACLES["rate_limit_sweep"] = f"""
+ORACLES["rate_limit_sweep"] = f"""
 WITH arr AS (
   SELECT (CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
                AS BIGINT) * 86400
@@ -14391,11 +14382,11 @@ FROM agg ORDER BY delay_s
 """
 
 
-STAGED_ORACLES["watermark_state_tradeoff"] = _watermark_state_sql()
+ORACLES["watermark_state_tradeoff"] = _watermark_state_sql()
 
 # Twin of operators/analytics.py:key_churn_audit — distinct (key, day)
 # activity, per-key first/last days, per-day outer joins, running universe.
-STAGED_ORACLES["key_churn_audit"] = f"""
+ORACLES["key_churn_audit"] = f"""
 WITH activity AS (
   SELECT DISTINCT user_id, {_DAY} AS day FROM events
 ),
@@ -14447,7 +14438,7 @@ from inde1_spark.operators.analytics import LATENESS_PROD_DELAY_S  # noqa: E402
 # Twin of operators/analytics.py:lateness_attribution_audit — per-key
 # running max in (event_id, ts) arrival order, per-day rollup at the
 # deployed delay.
-STAGED_ORACLES["lateness_attribution_audit"] = f"""
+ORACLES["lateness_attribution_audit"] = f"""
 WITH lat AS (
   SELECT {_DAY} AS day,
          MAX(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
@@ -14474,7 +14465,7 @@ FROM agg ORDER BY day
 
 # Twin of operators/similarity.py:ivf_list_balance_audit — per-label
 # counts, 1-row totals, HUGEINT-promoted balance product.
-STAGED_ORACLES["ivf_list_balance_audit"] = f"""
+ORACLES["ivf_list_balance_audit"] = f"""
 WITH lists AS (
   SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs
   FROM embeddings GROUP BY 1
@@ -14495,7 +14486,7 @@ FROM lists, totals ORDER BY label
 # exact ceil shard bills per lane, per-doc over-budget counts, 4-row join.
 from inde1_spark.operators.corpus import PACK_BUDGET_GRID, PACK_PACKERS  # noqa: E402
 
-STAGED_ORACLES["pack_budget_sweep"] = f"""
+ORACLES["pack_budget_sweep"] = f"""
 WITH base AS (
   SELECT CAST(len(list_filter(string_split(text, ' '), t -> t <> ''))
               AS BIGINT) AS n_tok,

@@ -39,18 +39,8 @@ ORACLES = entrymod.oracle_sql()
 # part of the driver-facing query surface (scale-killer plans by design)
 QUERIES.update(entrymod.test_only_queries())
 ORACLES.update(entrymod.test_only_oracle_sql())
-
-
-def test_every_query_has_oracle():
-    missing = sorted(set(QUERIES) - set(ORACLES))
-    # non-SQL-expressible ops may be absent from oracles; list them here.
-    # Empty since r04: the minhash fast paths hash against the exact
-    # ground-truth SQL (output equality pinned by test_dedup_fast_path),
-    # and simhash-fast gates through its contract query.
-    allowed_rows_only: set[str] = set()
-    assert set(missing) <= allowed_rows_only, f"queries missing oracles: {missing}"
-    stale = sorted(set(ORACLES) - set(QUERIES))
-    assert not stale, f"oracles without queries: {stale}"
+# the registry checks (every query has an oracle and vice versa) need no
+# session and live in tests/test_registry.py, in the default suite
 
 
 def test_entry_smoke(spark):

@@ -8,6 +8,15 @@ change any plan is checked by dumping before and after and diffing:
     python tools/plan_digest.py OUT.json [--sf DIR]
     python tools/plan_digest.py --diff A.json B.json
 
+Each dump also records each accessor's names in accessor order (``_order``)
+and the md5 of each name's oracle SQL (``_oracles``). ``--diff`` lists every
+name that moved within its accessor's order (the fewest names whose moves
+explain the new order), entered or left the driver's gate window (the first
+``GATE_WINDOW`` of ``queries()``), changed accessor, or whose oracle SQL
+changed, and exits 1 on any of them. A dump without those keys, taken by an
+older version of this tool, gets one warning line and only its plans are
+compared.
+
 Expression ids (``#123L``), RDD ids (``[12]`` after an RDD class name,
 ``rddId=``) and ``plan_id=`` tags differ from process to process and are
 replaced with placeholders before writing. Persisted and checkpointed
@@ -40,6 +49,8 @@ tests/test_staged_parity.py -k <name>``) instead.
 from __future__ import annotations
 
 import argparse
+import bisect
+import hashlib
 import json
 import os
 import re
@@ -57,6 +68,11 @@ UNSTABLE = (
 )
 
 SESSION = "_session"
+ORDER = "_order"
+ORACLES = "_oracles"
+ACCESSORS = ("queries", "staged_queries", "test_only_queries")
+ORACLE_ACCESSORS = ("oracle_sql", "staged_oracle_sql", "test_only_oracle_sql")
+GATE_WINDOW = 50  # the driver's correctness gate verifies the first 50 queries()
 
 _NORMALIZE = (
     (re.compile(r"#\d+L?"), "#N"),
@@ -79,15 +95,21 @@ def dump(out_path: str, sf_dir: str) -> None:
 
     spark = get_spark(app_name="inde1-plan-digest")
     spark.sparkContext.setLogLevel("ERROR")
-    registry = {
-        **entry_mod.queries(),
-        **entry_mod.staged_queries(),
-        **entry_mod.test_only_queries(),
+    surfaces = {acc: getattr(entry_mod, acc)() for acc in ACCESSORS}
+    registry = {k: v for qs in surfaces.values() for k, v in qs.items()}
+    oracles = {
+        name: hashlib.md5(sql.encode()).hexdigest()
+        for acc in ORACLE_ACCESSORS
+        for name, sql in getattr(entry_mod, acc)().items()
     }
-    plans: dict = {SESSION: {
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        "defaultParallelism": spark.sparkContext.defaultParallelism,
-    }}
+    plans: dict = {
+        SESSION: {
+            "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "defaultParallelism": spark.sparkContext.defaultParallelism,
+        },
+        ORDER: {acc: list(qs) for acc, qs in surfaces.items()},
+        ORACLES: oracles,
+    }
     for name, fn in registry.items():
         df = fn(spark, sf_dir)
         plans[name] = normalize(df._jdf.queryExecution().optimizedPlan().toString())
@@ -96,7 +118,51 @@ def dump(out_path: str, sf_dir: str) -> None:
     spark.stop()
     with open(out_path, "w") as f:
         json.dump(plans, f, indent=1, sort_keys=True)
-    print(f"{len(plans) - 1} plans -> {out_path}")
+    print(f"{len(registry)} plans -> {out_path}")
+
+
+def _moved(a: list[str], b: list[str]) -> set[str]:
+    """The fewest names of ``a`` whose moves turn ``a`` into ``b``: the names
+    common to both outside a longest common subsequence (a longest increasing
+    run of ``b`` positions, patience-sorted)."""
+    pos = {k: i for i, k in enumerate(b)}
+    common = [k for k in a if k in pos]
+    tail_pos: list[int] = []  # tail_pos[n]: smallest end of an increasing run of n+1
+    tail_idx: list[int] = []
+    prev: list[int | None] = []
+    for i, k in enumerate(common):
+        n = bisect.bisect_left(tail_pos, pos[k])
+        prev.append(tail_idx[n - 1] if n else None)
+        if n == len(tail_pos):
+            tail_pos.append(pos[k])
+            tail_idx.append(i)
+        else:
+            tail_pos[n], tail_idx[n] = pos[k], i
+    keep, i = set(), tail_idx[-1] if tail_idx else None
+    while i is not None:
+        keep.add(common[i])
+        i = prev[i]
+    return set(common) - keep
+
+
+def _order_changes(a: dict, b: dict, a_path: str, b_path: str) -> list[str]:
+    lines = []
+    for acc in sorted(a.keys() | b.keys()):
+        oa, ob = a.get(acc, []), b.get(acc, [])
+        pa, pb = {k: i for i, k in enumerate(oa)}, {k: i for i, k in enumerate(ob)}
+        crossed = set()
+        if acc == "queries":
+            crossed = {k for k in pa.keys() & pb.keys()
+                       if (pa[k] < GATE_WINDOW) != (pb[k] < GATE_WINDOW)}
+        for k in sorted(_moved(oa, ob) | crossed, key=pb.get):
+            note = ""
+            if k in crossed:
+                note = (" (enters the gate window)" if pb[k] < GATE_WINDOW
+                        else " (leaves the gate window)")
+            lines.append(f"moved in {acc}: {k} {pa[k]} -> {pb[k]}{note}")
+        lines += [f"only in {a_path} {acc}: {k}" for k in oa if k not in pb]
+        lines += [f"only in {b_path} {acc}: {k}" for k in ob if k not in pa]
+    return lines
 
 
 def diff(a_path: str, b_path: str) -> int:
@@ -107,6 +173,22 @@ def diff(a_path: str, b_path: str) -> int:
     sa, sb = a.pop(SESSION, None), b.pop(SESSION, None)
     if sa != sb:
         print(f"warning: session settings differ: {a_path} {sa}, {b_path} {sb}")
+    order_a, order_b = a.pop(ORDER, None), b.pop(ORDER, None)
+    oracles_a, oracles_b = a.pop(ORACLES, None), b.pop(ORACLES, None)
+    old = sorted({p for p, d in ((a_path, order_a), (a_path, oracles_a),
+                                 (b_path, order_b), (b_path, oracles_b)) if d is None})
+    order_lines, oracle_lines = [], []
+    if old:
+        print(f"warning: no order or oracle record in {', '.join(old)} "
+              "(old dump); only plans are compared")
+    else:
+        order_lines = _order_changes(order_a, order_b, a_path, b_path)
+        oracle_lines = [
+            f"oracle differs: {k}" if k in oracles_a and k in oracles_b
+            else f"oracle only in {a_path if k in oracles_a else b_path}: {k}"
+            for k in sorted(oracles_a.keys() | oracles_b.keys())
+            if oracles_a.get(k) != oracles_b.get(k)
+        ]
     only_a, only_b = sorted(a.keys() - b.keys()), sorted(b.keys() - a.keys())
     changed = sorted(k for k in a.keys() & b.keys() if a[k] != b[k])
     stable = [k for k in changed if k not in UNSTABLE]
@@ -117,11 +199,14 @@ def diff(a_path: str, b_path: str) -> int:
     for k in changed:
         note = " (unstable across runs, check its parity test)" if k in UNSTABLE else ""
         print(f"differs{note}: {k}")
+    for line in order_lines + oracle_lines:
+        print(line)
     n_same = len(a.keys() & b.keys()) - len(changed)
     print(f"{n_same} identical, {len(stable)} differ, "
           f"{len(changed) - len(stable)} unstable differ, "
-          f"{len(only_a) + len(only_b)} unmatched")
-    return 1 if stable or only_a or only_b else 0
+          f"{len(only_a) + len(only_b)} unmatched, "
+          f"{len(order_lines)} order changes, {len(oracle_lines)} oracle changes")
+    return 1 if stable or only_a or only_b or order_lines or oracle_lines else 0
 
 
 def main() -> int:
@@ -130,7 +215,8 @@ def main() -> int:
     ap.add_argument("--sf", help="scale-factor directory of the parquet "
                     "tables (default: the entry module's SF0001)")
     ap.add_argument("--diff", nargs=2, metavar=("A", "B"),
-                    help="list the entries whose plans differ between two digests")
+                    help="list the entries whose plans, order or oracles differ "
+                    "between two digests")
     args = ap.parse_args()
     if args.diff:
         return diff(*args.diff)
