@@ -100,9 +100,10 @@ def test_old_dump_gets_one_warning(tmp_path, capsys):
     assert len(warnings) == 1 and "old dump" in warnings[0]
 
 
-def test_moved_is_the_fewest_names():
+def test_moved_names_are_the_moved_block():
     a = list("abcdefgh")
     assert pd._moved(a, a) == set()
     assert pd._moved(a, list("habcdefg")) == {"h"}
     assert pd._moved(a, list("bcdaefgh")) == {"a"}
-    assert len(pd._moved(a, list("badcfehg"))) == 4  # one of each swapped pair
+    assert pd._moved(a, list("aefbcdgh")) == {"e", "f"}
+    assert pd._moved(a, list("abxcd")) == set()  # an added name moves nothing
