@@ -6,7 +6,6 @@ Spark session starts, so they run in the default suite.
 
 from __future__ import annotations
 
-import itertools
 import os
 import sys
 
@@ -14,12 +13,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from inde1_spark.oracles import ORACLES as ALL_ORACLES
-
-SURFACES = {
-    "queries": entrymod.queries(),
-    "staged_queries": entrymod.staged_queries(),
-    "test_only_queries": entrymod.test_only_queries(),
-}
 
 
 def test_every_query_has_oracle():
@@ -58,13 +51,11 @@ def test_staged_stay_out_of_production_surface():
 
 def test_no_name_on_two_surfaces():
     # bench.py and tools/profile_bench.py merge {**staged_queries(),
-    # **queries()}, which would silently hide such a collision
+    # **queries()}, which would silently hide a name on two surfaces; a name
+    # twice on one surface would collapse in its accessor's dict
     names = [q.name for q in entrymod._table()]
     dups = sorted(n for n in set(names) if names.count(n) > 1)
     assert not dups, f"names registered twice: {dups}"
-    for (a, qa), (b, qb) in itertools.combinations(SURFACES.items(), 2):
-        both = sorted(set(qa) & set(qb))
-        assert not both, f"on both {a} and {b}: {both}"
 
 
 def test_every_oracle_has_a_record():

@@ -1,9 +1,10 @@
 """Normalized optimized-plan digest of every registered query.
 
 Builds each ``queries()``, ``staged_queries()`` and ``test_only_queries()``
-entry on one scale factor (sf0.001 by default), writes its optimized logical plan to a JSON
-file ``{name: plan}``, and diffs two such files. A refactor that must not
-change any plan is checked by dumping before and after and diffing:
+entry on one scale factor (sf0.001 by default), writes its optimized logical
+plan to a JSON file ``{name: plan}``, and diffs two such files. A refactor
+that must not change any plan is checked by dumping before and after and
+diffing:
 
     python tools/plan_digest.py OUT.json [--sf DIR]
     python tools/plan_digest.py --diff A.json B.json
@@ -11,21 +12,21 @@ change any plan is checked by dumping before and after and diffing:
 Each dump also records each accessor's names in accessor order (``_order``)
 and the md5 of each name's oracle SQL (``_oracles``). ``--diff`` lists every
 name that moved within its accessor's order (outside the blocks difflib
-matches between the two orders), entered or left the driver's gate window (the first
-``GATE_WINDOW`` of ``queries()``), changed accessor, or whose oracle SQL
-changed, and exits 1 on any of them. A dump without those keys, taken by an
-older version of this tool, gets one warning line and only its plans are
-compared.
+matches between the two orders), entered or left the driver's gate window
+(the first ``GATE_WINDOW`` of ``queries()``), changed accessor, or whose
+oracle SQL changed, and exits 1 on any of them. A dump without those keys,
+taken by an older version of this tool, gets one warning line and only its
+plans are compared.
 
 Expression ids (``#123L``), RDD ids (``[12]`` after an RDD class name,
 ``rddId=``), ``plan_id=`` tags and the numbered names of higher-order
 function variables (``lambda x_241``) differ from process to process, and
 with the order entries are built in, and are replaced with placeholders
-before writing. Persisted and checkpointed
-intermediates are released after each entry, so no entry's plan picks up
-another entry's cached data. Some builders fire jobs while building (lazy
-checkpoints under AQE); a full dump at sf0.001 takes about 160 s on 4
-cores. Never run it beside pytest or a benchmark.
+before writing. Persisted and checkpointed intermediates are released after
+each entry, so no entry's plan picks up another entry's cached data. Some
+builders fire jobs while building (lazy checkpoints under AQE); a full dump
+at sf0.001 takes about 160 s on 4 cores. Never run it beside pytest or a
+benchmark.
 
 Compare only dumps taken with the same ``SPARK_GRAFT_CPUS``: scan-parallel
 loads (``Repartition <cores>``), ``Range`` splits and adaptive stage ids in
