@@ -1919,49 +1919,60 @@ def kcore_dup_graph(
     candidates), while chains and stars (transitivity hazards) peel away
     entirely.
 
-    Peeling is the standard iterative kernel: each round recomputes
-    degrees (one combinable groupBy on the endpoint union) and keeps
-    edges whose BOTH endpoints have degree >= k — two node-keyed
-    semi-joins, lazily checkpointed so the unrolled plan stays linear
-    (the connected-components invariant). ``rounds`` is fixed so the
-    DuckDB twin can unroll the same chained CTEs; rounds past the
-    fixpoint are no-ops in both engines, and the testdata graphs
-    converge in <= 3. Output: one row per k (surviving nodes/edges).
+    Peeling is the standard iterative kernel, run for every k at once:
+    each edge is tagged with each k, and ONE chain of ``rounds`` peels is
+    keyed on (k, node). Each round recomputes degrees (one combinable
+    groupBy(k, u) on the endpoint union) and keeps edges whose BOTH
+    endpoints have degree >= k — two (k, node)-keyed semi-joins, lazily
+    checkpointed so the unrolled plan stays linear (the
+    connected-components invariant). ``rounds`` is fixed so the DuckDB
+    twin can unroll the same chained CTEs; rounds past the fixpoint are
+    no-ops in both engines, and the testdata graphs converge in <= 3.
+    Output: one row per k (surviving nodes/edges), counted by one
+    groupBy(k) and left-joined from the k list, so a k whose core is
+    empty still reports (k, 0, 0).
     """
     edges0 = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
-    out = None
-    for k in ks:
-        e = edges0
-        for _ in range(rounds):
-            deg = (
-                e.select(F.col("doc_a").alias("u"))
-                .union(e.select(F.col("doc_b").alias("u")))
-                .groupBy("u")
-                .agg(F.count("*").cast("long").alias("deg"))
-            )
-            keep = deg.filter(F.col("deg") >= k).select("u")
-            e = lazy_checkpoint(
-                e.join(keep.withColumnRenamed("u", "doc_a"), "doc_a").join(
-                    keep.withColumnRenamed("u", "doc_b"), "doc_b"
-                )
-            )
-        n_edges = e.agg(F.count("*").cast("long").alias("n_edges"))
-        n_nodes = (
-            e.select(F.col("doc_a").alias("u"))
-            .union(e.select(F.col("doc_b").alias("u")))
-            .distinct()
-            .agg(F.count("*").cast("long").alias("n_nodes"))
+    each_k = F.explode(F.array(*[F.lit(k).cast("long") for k in ks])).alias("k")
+    e = edges0.select(each_k, "doc_a", "doc_b")
+    for _ in range(rounds):
+        deg = (
+            e.select("k", F.col("doc_a").alias("u"))
+            .union(e.select("k", F.col("doc_b").alias("u")))
+            .groupBy("k", "u")
+            .agg(F.count("*").cast("long").alias("deg"))
         )
-        row = (
-            n_edges.join(n_nodes)
-            .select(
-                F.lit(k).cast("long").alias("k"), "n_nodes", "n_edges"
+        keep = deg.filter(F.col("deg") >= F.col("k")).select("k", "u")
+        e = lazy_checkpoint(
+            e.join(keep.withColumnRenamed("u", "doc_a"), ["k", "doc_a"]).join(
+                keep.withColumnRenamed("u", "doc_b"), ["k", "doc_b"]
             )
         )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("k")
+    # each surviving edge contributes both endpoints: |E_k| = rows / 2
+    counts = (
+        e.select("k", F.col("doc_a").alias("u"))
+        .union(e.select("k", F.col("doc_b").alias("u")))
+        .groupBy("k")
+        .agg(
+            F.countDistinct("u").cast("long").alias("n_nodes"),
+            F.expr("count(*) div 2").cast("long").alias("n_edges"),
+        )
+    )
+    # the k list is built from a range, not local Python rows: those would
+    # make the action start a Python worker per partition to read them
+    return (
+        edges0.sparkSession.range(1)
+        .select(each_k)
+        .join(counts, "k", "left")
+        .select(
+            "k",
+            F.coalesce("n_nodes", F.lit(0).cast("long")).alias("n_nodes"),
+            F.coalesce("n_edges", F.lit(0).cast("long")).alias("n_edges"),
+        )
+        .orderBy("k")
+    )
 
 
 SWEEP_THRESHOLDS_PCT = (50, 60, 70, 80, 90)
@@ -2498,8 +2509,9 @@ def label_propagation_communities(
 
     Deterministic synchronous LPA: label_0(u) = u; each round every node
     adopts the most frequent label among its neighbors AND itself, ties
-    broken to the SMALLEST label — the argmax is min(struct(-votes,
-    label)), a map-side-combinable aggregate (never a per-node sorted
+    broken to the SMALLEST label — ``mode(label, deterministic=True)``
+    over the node's adjacency with a self-loop (the node's own vote), a
+    partially aggregated per-node aggregate (never a per-node sorted
     window). Fixed ``rounds`` synchronous rounds (engine-free semantics,
     same unroll in the oracle); each round ends in a lazy
     localCheckpoint so the plan stays linear (the connected-components
@@ -2508,9 +2520,9 @@ def label_propagation_communities(
 
     Output: community size -> number of communities of that size.
 
-    Scale: per round one equi-join on a node key + one combinable
-    aggregate over (node, label) — AQE skew-splits hub labels; state is
-    one (node, label) row per node.
+    Scale: per round one equi-join on a node key (the adjacency is cached
+    partitioned by it) + one aggregate keyed on the node; state is one
+    (node, label) row per node.
     """
     edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
@@ -2523,40 +2535,37 @@ def lpa_labels(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     over an ALREADY MATERIALIZED (doc_a, doc_b) edge table — the shared
     core under ``lpa_histogram`` (batch + streaming sink) and
     ``graph_modularity_audit``. The caller owns persistence of ``edges``
-    (it is scanned 2x per round + once for the label init).
+    (it is read only to build the persisted adjacency).
+
+    The adjacency holds both directions of every edge plus a (u, u)
+    self-loop, which is u's vote for its own label, so each round is one
+    join of the adjacency with the label table and one
+    ``mode(label, deterministic=True)`` per node: the most frequent label,
+    ties to the smallest.
     """
-    # undirected: both directions + self-vote (u votes its own label)
-    nbrs = edges.select(
+    directed = edges.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).union(
         edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
+    )
+    self_loops = directed.select("u").distinct().select(
+        "u", F.col("u").alias("v")
     )
     # r12: cache the adjacency PARTITIONED BY the per-round join key —
     # InMemoryTableScan keeps the child's outputPartitioning, so every
     # round's neighbor join reads it shuffle-free instead of re-exchanging
     # 2|E| rows per round (A/B: build 2.9-3.1 -> 2.5-2.9 s, same rows)
-    nbrs = persist(spread(nbrs, "v"))
+    nbrs = persist(spread(directed.union(self_loops), "v"))
     labels = (
         nbrs.select("u")
         .distinct()
         .select("u", F.col("u").alias("label"))
     )
     for _ in range(rounds):
-        votes = (
-            nbrs.join(labels.withColumnRenamed("u", "v"), "v")
-            .select("u", "label")
-            .union(labels.select("u", "label"))
-            .groupBy("u", "label")
-            .agg(F.count("*").cast("long").alias("votes"))
-        )
         labels = lazy_checkpoint(
-            votes.groupBy("u")
-            .agg(
-                F.min(F.struct((-F.col("votes")).alias("nv"), "label")).alias(
-                    "w"
-                )
-            )
-            .select("u", F.col("w.label").alias("label"))
+            nbrs.join(labels.withColumnRenamed("u", "v"), "v")
+            .groupBy("u")
+            .agg(F.mode("label", deterministic=True).alias("label"))
         )
     return labels
 

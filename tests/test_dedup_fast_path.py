@@ -382,29 +382,87 @@ def test_rebanding_planner_monotone_tradeoff(spark):
         assert 0.0 <= g <= 1.0
 
 
+def _docs(spark, texts):
+    return spark.createDataFrame(
+        [(i, t, "en", "x", len(t)) for i, t in enumerate(texts)],
+        ["doc_id", "text", "lang", "source", "n_chars"],
+    )
+
+
 def test_kcore_peels_chain_keeps_clique(spark):
     # planted graph: a 4-clique (3-core) plus a pendant chain — peeling
     # must drop the chain entirely and keep the clique intact
-    from pyspark.sql import functions as F
-
     from inde1_spark.operators.dedup import kcore_dup_graph, release_persisted
 
     # docs 0-3: identical text (4-clique of near-dups at any threshold);
     # docs 4-5: a near-dup pair of each other only (degree-1 after dedup
     # against the clique text) -> peels at k=2
     clique = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [(i, clique, "en", "x", len(clique)) for i in range(4)]
     pair = "iota kappa lambda mu nu xi omicron pi"
-    rows += [(4, pair, "en", "x", len(pair)), (5, pair, "en", "x", len(pair))]
-    docs = spark.createDataFrame(
-        rows, ["doc_id", "text", "lang", "source", "n_chars"]
-    )
+    docs = _docs(spark, [clique] * 4 + [pair] * 2)
     out = {r.k: (r.n_nodes, r.n_edges) for r in kcore_dup_graph(docs).collect()}
     release_persisted()
     # 2-core: the 4-clique survives (deg 3 each); the pair (deg 1) peels
     assert out[2] == (4, 6)
     # 3-core: still the clique
     assert out[3] == (4, 6)
+
+
+def test_kcore_reports_every_k_with_an_empty_core(spark):
+    # every k in the k list gets a row, (k, 0, 0) when its core is empty:
+    # the k-tagged chain has no rows left for such a k, so the counts are
+    # left-joined from the k list
+    from inde1_spark.operators.dedup import kcore_dup_graph, release_persisted
+
+    tri = "alpha beta gamma delta epsilon zeta eta theta"
+    pair = "iota kappa lambda mu nu xi omicron pi"
+    out = {
+        r.k: (r.n_nodes, r.n_edges)
+        for r in kcore_dup_graph(_docs(spark, [tri] * 3 + [pair] * 2)).collect()
+    }
+    release_persisted()
+    # 2-core: the triangle (deg 2 each); the pair peels. 3-core: empty
+    assert out == {2: (3, 3), 3: (0, 0)}
+
+    # no two documents share a word: no near-duplicate edge at all
+    distinct = [tri, pair, "rho sigma tau upsilon phi chi psi omega"]
+    out = {
+        r.k: (r.n_nodes, r.n_edges)
+        for r in kcore_dup_graph(_docs(spark, distinct)).collect()
+    }
+    release_persisted()
+    assert out == {2: (0, 0), 3: (0, 0)}
+
+
+def test_kcore_peels_every_k_in_one_chain(spark):
+    # the edge table is persisted once and every k shares one chain of
+    # KCORE_ROUNDS checkpointed peels: 1 + rounds handles, not
+    # 1 + len(ks) * rounds
+    from inde1_spark.operators.dedup import (
+        KCORE_ROUNDS,
+        kcore_dup_graph,
+        release_persisted,
+    )
+
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    release_persisted()  # clean slate
+    kcore_dup_graph(_docs(spark, [text] * 4)).collect()
+    assert release_persisted() == 1 + KCORE_ROUNDS == 5
+
+
+def test_lpa_ties_go_to_the_smallest_label(spark):
+    # path 1-2-3-4 and star 10-{11,12,13}: every vote in the first round
+    # is a tie, so "ties to the smallest label" pulls both components to
+    # their smallest node (ties to the largest gives other labels)
+    from inde1_spark.operators.dedup import lpa_labels, release_persisted
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (10, 13)],
+        "doc_a long, doc_b long",
+    )
+    labels = {r.u: r.label for r in lpa_labels(edges, 4).collect()}
+    release_persisted()
+    assert labels == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
 def test_threshold_sweep_monotone_and_consistent(spark):
