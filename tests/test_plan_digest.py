@@ -100,6 +100,21 @@ def test_old_dump_gets_one_warning(tmp_path, capsys):
     assert len(warnings) == 1 and "old dump" in warnings[0]
 
 
+def test_build_job_changes_are_info_lines(tmp_path, capsys):
+    a, b = _base(), _base()
+    a[pd.BUILD_JOBS] = {"q00": 28, "q01": 0, "s0": 3}
+    b[pd.BUILD_JOBS] = {"q00": 19, "q01": 0, "s0": 3}
+    rc, out = _diff(tmp_path, a, b, capsys)
+    assert rc == 0
+    info = [line for line in out.splitlines() if line.startswith("info:")]
+    assert info == ["info: build jobs of q00: 28 -> 19"]
+    # the record is not an entry: it is neither compared as a plan nor unmatched
+    assert "0 differ" in out and "0 unmatched" in out
+    del a[pd.BUILD_JOBS]
+    rc, out = _diff(tmp_path, a, b, capsys)
+    assert rc == 0 and "info:" not in out and "0 unmatched" in out
+
+
 def test_moved_names_are_the_moved_block():
     a = list("abcdefgh")
     assert pd._moved(a, a) == set()

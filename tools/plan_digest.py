@@ -18,6 +18,12 @@ oracle SQL changed, and exits 1 on any of them. A dump without those keys,
 taken by an older version of this tool, gets one warning line and only its
 plans are compared.
 
+Each entry is built under its own job group, and the number of Spark jobs
+its build fired before any action is recorded under ``_build_jobs``.
+``--diff`` prints one info line per entry whose count changed; these lines
+do not change the exit code. When either dump has no such record, the
+counts are not compared.
+
 Expression ids (``#123L``), RDD ids (``[12]`` after an RDD class name,
 ``rddId=``), ``plan_id=`` tags and the numbered names of higher-order
 function variables (``lambda x_241``) differ from process to process, and
@@ -77,6 +83,7 @@ UNSTABLE = (
 SESSION = "_session"
 ORDER = "_order"
 ORACLES = "_oracles"
+BUILD_JOBS = "_build_jobs"
 ACCESSORS = ("queries", "staged_queries", "test_only_queries")
 ORACLE_ACCESSORS = ("oracle_sql", "staged_oracle_sql", "test_only_oracle_sql")
 GATE_WINDOW = 50  # the driver's correctness gate verifies the first 50 queries()
@@ -104,7 +111,9 @@ def dump(out_path: str, sf_dir: str) -> None:
     from inde1_spark.session import get_spark
 
     spark = get_spark(app_name="inde1-plan-digest")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    tracker = sc.statusTracker()
     surfaces = {acc: getattr(entry_mod, acc)() for acc in ACCESSORS}
     registry = {k: v for qs in surfaces.values() for k, v in qs.items()}
     oracles = {
@@ -119,9 +128,15 @@ def dump(out_path: str, sf_dir: str) -> None:
         },
         ORDER: {acc: list(qs) for acc, qs in surfaces.items()},
         ORACLES: oracles,
+        BUILD_JOBS: {},
     }
     for name, fn in registry.items():
+        group = f"plan-digest:{name}"
+        sc.setJobGroup(group, name)
         df = fn(spark, sf_dir)
+        # job events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        plans[BUILD_JOBS][name] = len(tracker.getJobIdsForGroup(group))
         plans[name] = normalize(df._jdf.queryExecution().optimizedPlan().toString())
         release_persisted()
         spark.catalog.clearCache()
@@ -170,6 +185,7 @@ def diff(a_path: str, b_path: str) -> int:
         print(f"warning: session settings differ: {a_path} {sa}, {b_path} {sb}")
     order_a, order_b = a.pop(ORDER, None), b.pop(ORDER, None)
     oracles_a, oracles_b = a.pop(ORACLES, None), b.pop(ORACLES, None)
+    jobs_a, jobs_b = a.pop(BUILD_JOBS, None), b.pop(BUILD_JOBS, None)
     old = sorted({p for p, d in ((a_path, order_a), (a_path, oracles_a),
                                  (b_path, order_b), (b_path, oracles_b)) if d is None})
     order_lines, oracle_lines = [], []
@@ -196,6 +212,10 @@ def diff(a_path: str, b_path: str) -> int:
         print(f"differs{note}: {k}")
     for line in order_lines + oracle_lines:
         print(line)
+    if jobs_a is not None and jobs_b is not None:
+        for k in sorted(jobs_a.keys() & jobs_b.keys()):
+            if jobs_a[k] != jobs_b[k]:
+                print(f"info: build jobs of {k}: {jobs_a[k]} -> {jobs_b[k]}")
     n_same = len(a.keys() & b.keys()) - len(changed)
     print(f"{n_same} identical, {len(stable)} differ, "
           f"{len(changed) - len(stable)} unstable differ, "
