@@ -1898,9 +1898,12 @@ def split_balance_audit(documents: DataFrame) -> DataFrame:
     counts = persist(documents.groupBy(
         "source", split.alias("split")
     ).agg(F.count("*").cast("long").alias("c")))
-    # fixed 3-bin grid so missing splits contribute their full global mass
-    bins = documents.sparkSession.createDataFrame(
-        [("train",), ("val",), ("test",)], "split string"
+    # fixed 3-bin grid so missing splits contribute their full global mass;
+    # built from a range, not local Python rows: those would make every
+    # action that reads the grid start a Python worker per partition
+    bins = documents.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(s) for s in ("train", "val", "test")]))
+        .alias("split")
     )
     per_source = counts.groupBy("source").agg(
         F.sum("c").cast("long").alias("n_s")

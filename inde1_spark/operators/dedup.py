@@ -3087,8 +3087,11 @@ def shingle_df_cap_sweep(documents: DataFrame) -> DataFrame:
     sh = shingle_table(documents)
     dfs = sh.groupBy("shingle").agg(F.count("*").cast("long").alias("df"))
     hist = dfs.groupBy("df").agg(F.count("*").cast("long").alias("n_shingles"))
-    caps = documents.sparkSession.createDataFrame(
-        [(c,) for c in DF_CAP_SWEEP], "cap long"
+    # the cap grid is built from a range, not local Python rows: those
+    # would make the action start a Python worker per partition
+    caps = documents.sparkSession.range(1).select(
+        F.explode(F.array(*[F.lit(c).cast("long") for c in DF_CAP_SWEEP]))
+        .alias("cap")
     )
     d38 = "decimal(38,0)"
     dfc = F.col("df").cast(d38)

@@ -1,35 +1,52 @@
-"""Stateful streaming: entry<->exit sessionization with keyed state (T4).
+"""Keyed-state streaming: the T4 sessionizer and the per-key monitors.
 
-The reference reconstructs sessions in batch by zipping per-key lists
-(MainWeekly.scala:111-128) and tracks live state in a ConcurrentHashMap
-(RepoEventsApi.scala:38-69). The streaming-native form is keyed state per
-(plate, lot, spot): an ENTRY opens state, the matching EXIT closes it and
-emits a completed session row.
+The reference tracks live state in a ConcurrentHashMap
+(RepoEventsApi.scala:38-69) and rebuilds sessions in batch by zipping
+per-key lists (MainWeekly.scala:111-128). The streaming-native form is
+keyed state: ``applyInPandasWithState`` runs a state function over the
+Arrow batches of each key group, and the state lives in the executor's
+state store (RocksDB on a real cluster), bounded by the keyspace, never by
+stream length.
 
-``applyInPandasWithState`` executes the state function over Arrow batches
-per key group — state lives in the executor's state store (RocksDB on a
-real cluster), bounded by the active-session keyspace, never by stream
-length. An EVENT-TIME timeout (watermark-driven) evicts abandoned entries
-(cars that never exit — the reference's unbounded map has no such bound;
-SURVEY §7.4). Event-time rather than processing-time is deliberate twice
-over: eviction follows the data's clock on replay/backfill, and a pending
-processing-time timeout forces ``availableNow`` backfills to spin empty
-micro-batches until the wall-clock deadline — observed as 679 empty
-batches for one file of input.
+Every monitor here is one keyed fold built by ``keyed_fold``. A monitor
+supplies its key columns, state and output DDL, an initial state, an
+optional row order and a step ``step(key, state, rows) -> (state,
+out_rows)``. Per key and micro-batch the scaffold concatenates the key's
+rows, sorts them by the row order when one is given, passes the stored
+state (the initial state for a new key), stores the state the step returns
+and emits ``out_rows`` (dicts keyed by the output DDL's column names).
+Monitors run in append mode with no timeout: a monitor's state is a few
+values per key and lives as long as its key.
+
+``sessionize_stream`` is the one builder with its own call. An ENTRY opens
+state per (plate, lot, spot) and the matching EXIT closes it and emits a
+completed session row; an EVENT-TIME timeout (watermark-driven) evicts
+abandoned entries, cars that never exit (the reference's unbounded map has
+no such bound; SURVEY §7.4). Event-time rather than processing-time is
+deliberate twice over: eviction follows the data's clock on
+replay/backfill, and a pending processing-time timeout forces
+``availableNow`` backfills to spin empty micro-batches until the
+wall-clock deadline, observed as 679 empty batches for one file of input.
+
+Every state function and step is a self-contained closure (stdlib and
+pandas imported on the worker, no reference to this package's globals):
+cloudpickle ships it by value, so executor Python workers need not have
+``inde1_spark`` on their PYTHONPATH.
 
 100 TB notes: state is partitioned by key hash across executors; the state
-store checkpoint makes it exactly-once. Key cardinality = concurrently open
-sessions (bounded by total parking capacity), so state size is O(spots),
-independent of event volume.
+store checkpoint makes it exactly-once. Sessionizer keys are the
+concurrently open sessions (bounded by total parking capacity), so its
+state is O(spots), independent of event volume.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
 from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -117,100 +134,50 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_stream_tws(events: DataFrame) -> DataFrame:
-    """The same sessionizer on Spark 4's ``transformWithStateInPandas``.
-
-    T3/T4 via the successor API to ``applyInPandasWithState``: typed state
-    variables (ValueState) + first-class event-time timers replace the
-    single state tuple + setTimeoutTimestamp. Semantics are identical to
-    ``sessionize_stream`` (pytest asserts equality with the batch pairing
-    and with the old API); worth having both because the reference's
-    ConcurrentHashMap state (RepoEventsApi.scala:38-69) maps naturally to
-    named state variables, and new state features (TTL, map/list state,
-    initial state) only land on this API. Same 100 TB posture: state
-    partitioned by key hash, RocksDB-backed, bounded by open sessions.
-
-    Environment note: the TWS state server speaks protobuf between JVM and
-    Python; this container has no ``google.protobuf``, so execution is
-    pytest-skipped here (plan construction is still asserted). On a normal
-    cluster install (protobuf ships with the pyspark[connect] extras) the
-    equality test runs as written.
-
-    The processor is a self-contained closure (stdlib + pandas only):
-    cloudpickle ships it by value, executors never import this package.
+def keyed_fold(
+    events: DataFrame,
+    keys: Sequence[str],
+    state_schema: str,
+    output_schema: str,
+    init: tuple,
+    step: Callable[[tuple, tuple, pd.DataFrame], tuple[tuple, list[dict]]],
+    order: Sequence[str] | None = None,
+) -> DataFrame:
+    """One keyed fold over a stream: per key and micro-batch,
+    ``step(key, state, rows)`` gets the stored state (``init`` for a new
+    key) and the key's rows of the batch, sorted by ``order`` when given,
+    and returns the new state and the output rows to emit. The returned
+    state is always stored; output rows are dicts keyed by
+    ``output_schema``'s column names. Append mode, no timeout.
     """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+    cols = StructType.fromDDL(output_schema).fieldNames()
+    by = list(order) if order else None
 
-    entry_type, exit_type = EVENT_ENTRY, EVENT_EXIT
-    abandon_ms = ABANDON_TIMEOUT_MS
-    cols = [
-        "license_plate", "parking_lot_id", "parking_spot_id",
-        "entry_ts", "exit_ts", "duration_min",
-    ]
+    def _fold(
+        key: tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        import pandas as pd  # noqa: PLC0415 — worker-side import
 
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._entry = handle.getValueState("entry_us", "entry_us long")
-            self._handle = handle
+        rows = pd.concat(list(batches), ignore_index=True)
+        if by:
+            rows = rows.sort_values(by)
+        new_state, out = step(key, state.get if state.exists else init, rows)
+        state.update(new_state)
+        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
 
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd  # noqa: PLC0415 — worker-side import
-
-            plate, lot, spot = key
-            entry_us = self._entry.get()[0] if self._entry.exists() else 0
-            out: list[dict] = []
-            batch = pd.concat(list(rows), ignore_index=True).sort_values("ts")
-            for row in batch.itertuples(index=False):
-                ts_us = int(row.ts.value // 1_000)
-                if row.event_type == entry_type:
-                    entry_us = ts_us
-                elif row.event_type == exit_type and entry_us:
-                    out.append(
-                        {
-                            "license_plate": plate,
-                            "parking_lot_id": lot,
-                            "parking_spot_id": spot,
-                            "entry_ts": pd.Timestamp(entry_us, unit="us"),
-                            "exit_ts": pd.Timestamp(ts_us, unit="us"),
-                            "duration_min": (ts_us - entry_us) / 60_000_000.0,
-                        }
-                    )
-                    entry_us = 0
-            if entry_us:
-                self._entry.update((entry_us,))
-                # event-time timer: watermark past entry+30min evicts state
-                self._handle.registerTimer(entry_us // 1000 + abandon_ms)
-            elif self._entry.exists():
-                self._entry.clear()
-            if out:
-                yield pd.DataFrame(out)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # abandoned entry (no exit before the deadline): drop the state
-            self._entry.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.withWatermark("ts", WATERMARK_DELAY)
-        .groupBy("license_plate", "parking_lot_id", "parking_spot_id")
-        .transformWithStateInPandas(
-            _SessionProcessor(),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
+    return events.groupBy(*keys).applyInPandasWithState(
+        _fold,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
 FUNNEL_OUTPUT_SCHEMA = "user_id long, stage long, event_type string, ts timestamp"
 FUNNEL_STATE_SCHEMA = "stage long, t_us long"
-FUNNEL_WATERMARK = "10 minutes"
 
 
 def funnel_stage_stream(
@@ -239,25 +206,15 @@ def funnel_stage_stream(
     """
     w_us = window_hours * 3600 * 1_000_000
     steps_t = tuple(steps)
-    cols = ["user_id", "stage", "event_type", "ts"]
 
-    def _advance_group(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+    def _advance(
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (user_id,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        stage, t_us = state.get if state.exists else (0, 0)
+        stage, t_us = state
         out: list[dict] = []
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
         for row in rows.itertuples(index=False):
             if stage >= len(steps_t):
                 break
@@ -275,19 +232,16 @@ def funnel_stage_stream(
                         "ts": pd.Timestamp(ts_us, unit="us"),
                     }
                 )
-        state.update((stage, t_us))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (stage, t_us), out
 
-    return (
-        events.withWatermark("ts", FUNNEL_WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _advance_group,
-            outputStructType=FUNNEL_OUTPUT_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.withWatermark("ts", WATERMARK_DELAY),
+        ["user_id"],
+        FUNNEL_STATE_SCHEMA,
+        FUNNEL_OUTPUT_SCHEMA,
+        (0, 0),
+        _advance,
+        order=["ts", "event_id"],
     )
 
 
@@ -304,7 +258,6 @@ CUSUM_OUTPUT_SCHEMA = (
 CUSUM_STATE_SCHEMA = (
     "cur_day long, cnt long, prefix long, runmin long, runmax long"
 )
-CUSUM_WATERMARK = "10 minutes"
 
 
 def cusum_alarm_stream(
@@ -335,35 +288,15 @@ def cusum_alarm_stream(
     """
     mu = int(mu_per_day)
     thr = int(threshold_mult) * mu
-    cols = [
-        "event_type",
-        "day",
-        "n_events",
-        "cusum_pos",
-        "cusum_neg",
-        "alarm_pos",
-        "alarm_neg",
-    ]
 
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (event_type,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        cur_day, cnt, prefix, runmin, runmax = (
-            state.get if state.exists else (-1, 0, 0, 0, 0)
-        )
+        cur_day, cnt, prefix, runmin, runmax = state
         out: list[dict] = []
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
         for row in rows.itertuples(index=False):
             day = int(row.ts.value // (86_400 * 1_000_000_000))
             if cur_day < 0:
@@ -395,19 +328,16 @@ def cusum_alarm_stream(
                 }
             )
             cur_day, cnt = day, 1
-        state.update((cur_day, cnt, prefix, runmin, runmax))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (cur_day, cnt, prefix, runmin, runmax), out
 
-    return (
-        events.withWatermark("ts", CUSUM_WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=CUSUM_OUTPUT_SCHEMA,
-            stateStructType=CUSUM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.withWatermark("ts", WATERMARK_DELAY),
+        ["event_type"],
+        CUSUM_STATE_SCHEMA,
+        CUSUM_OUTPUT_SCHEMA,
+        (-1, 0, 0, 0, 0),
+        _advance,
+        order=["ts", "event_id"],
     )
 
 
@@ -450,26 +380,14 @@ def sprt_stream(events: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     ENTRY_T, EXIT_T = "view", "click"
-    cols = ["day", "n_entry", "n_exit", "llr_nano", "verdict", "decided"]
 
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        cur_day, e_cnt, x_cnt, cum_e, cum_x, decided = (
-            state.get if state.exists else (-1, 0, 0, 0, 0, 0)
-        )
+        cur_day, e_cnt, x_cnt, cum_e, cum_x, decided = state
         out: list[dict] = []
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
         for row in rows.itertuples(index=False):
             typ = row.event_type
             if typ not in (ENTRY_T, EXIT_T):
@@ -506,20 +424,16 @@ def sprt_stream(events: DataFrame) -> DataFrame:
                 e_cnt += 1
             else:
                 x_cnt += 1
-        state.update((cur_day, e_cnt, x_cnt, cum_e, cum_x, decided))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (cur_day, e_cnt, x_cnt, cum_e, cum_x, decided), out
 
-    return (
-        events.withWatermark("ts", CUSUM_WATERMARK)
-        .withColumn("g", F.lit(1))
-        .groupBy("g")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=SPRT_OUTPUT_SCHEMA,
-            stateStructType=SPRT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.withWatermark("ts", WATERMARK_DELAY).withColumn("g", F.lit(1)),
+        ["g"],
+        SPRT_STATE_SCHEMA,
+        SPRT_OUTPUT_SCHEMA,
+        (-1, 0, 0, 0, 0, 0),
+        _advance,
+        order=["ts", "event_id"],
     )
 
 
@@ -571,26 +485,13 @@ def space_saving_stream(
     scales parallelism without changing any per-shard guarantee.
     """
     cap = int(capacity)
-    cols = ["shard", "user_id", "est_count", "err_bound"]
 
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd  # noqa: PLC0415 — worker-side import
-
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         (shard,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        if state.exists:
-            keys, counts, dec = state.get
-            summary = dict(zip(keys, counts))
-        else:
-            summary, dec = {}, 0
-        rows = pd.concat(list(batches), ignore_index=True)
+        keys, counts, dec = state
+        summary = dict(zip(keys, counts))
         # exact, order-free per-batch counts: the only reduction over rows
         for uid, c in rows["user_id"].value_counts().items():
             k = int(uid)
@@ -600,9 +501,6 @@ def space_saving_stream(
             t = ordered[cap][1]  # the (capacity+1)-th largest count
             dec += t
             summary = {k: c - t for k, c in ordered[:cap] if c - t > 0}
-        state.update(
-            (list(summary.keys()), list(summary.values()), dec)
-        )
         out = [
             {
                 "shard": int(shard),
@@ -612,22 +510,21 @@ def space_saving_stream(
             }
             for k, c in sorted(summary.items())
         ]
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (list(summary.keys()), list(summary.values()), dec), out
 
     from pyspark.sql import functions as F
 
-    return (
+    # no watermark: it would drop late rows before the stateful operator,
+    # and the summary's guarantee counts every row
+    return keyed_fold(
         events.withColumn(
             "shard", (F.col("user_id") % F.lit(int(n_shards))).cast("long")
-        )
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=MG_OUTPUT_SCHEMA,
-            stateStructType=MG_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ["shard"],
+        MG_STATE_SCHEMA,
+        MG_OUTPUT_SCHEMA,
+        ([], [], 0),
+        _advance,
     )
 
 
@@ -638,7 +535,6 @@ def space_saving_stream(
 
 GAP_OUTPUT_SCHEMA = "event_type string, gap_hour string"
 GAP_STATE_SCHEMA = "last_hour long"
-GAP_WATERMARK = "10 minutes"
 
 
 def gap_alarm_stream(events: DataFrame) -> DataFrame:
@@ -661,25 +557,15 @@ def gap_alarm_stream(events: DataFrame) -> DataFrame:
     un-miss an hour that was already alarmed, the documented
     at-most-once deviation under disorder.
     """
-    cols = ["event_type", "gap_hour"]
 
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (event_type,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        (last,) = state.get if state.exists else (-1,)
+        (last,) = state
         out: list[dict] = []
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
         for row in rows.itertuples(index=False):
             hour = int(row.ts.value // (3600 * 1_000_000_000))
             if last < 0:
@@ -697,19 +583,16 @@ def gap_alarm_stream(events: DataFrame) -> DataFrame:
                     }
                 )
             last = hour
-        state.update((last,))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (last,), out
 
-    return (
-        events.withWatermark("ts", GAP_WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=GAP_OUTPUT_SCHEMA,
-            stateStructType=GAP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.withWatermark("ts", WATERMARK_DELAY),
+        ["event_type"],
+        GAP_STATE_SCHEMA,
+        GAP_OUTPUT_SCHEMA,
+        (-1,),
+        _advance,
+        order=["ts", "event_id"],
     )
 
 
@@ -725,7 +608,6 @@ DRIFT_STREAM_STATE_SCHEMA = (
     "cur_day long, b0 long, b1 long, b2 long, b3 long, b4 long, "
     "b5 long, b6 long, b7 long, b8 long, b9 long"
 )
-DRIFT_STREAM_WATERMARK = "10 minutes"
 DRIFT_TVD_ALARM = 0.25  # page when a day's distribution moves this far
 
 
@@ -755,25 +637,14 @@ def value_drift_stream(
     ref_p = [b / ref_total for b in ref_bins]
     width = float(bin_width)
     alarm = float(tvd_alarm)
-    cols = ["event_type", "day", "n_events", "tvd", "drift"]
 
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (event_type,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        if state.exists:
-            st = list(state.get)
-            cur_day, bins = st[0], st[1:]
-        else:
-            cur_day, bins = -1, [0] * n_bins
+        cur_day, *bins = state
         out: list[dict] = []
 
         def close_day() -> None:
@@ -795,9 +666,6 @@ def value_drift_stream(
                 }
             )
 
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
         for row in rows.itertuples(index=False):
             day = int(row.ts.value // (86_400 * 1_000_000_000))
             b = min(max(int(row.value // width), 0), n_bins - 1)
@@ -808,19 +676,16 @@ def value_drift_stream(
                 cur_day, bins = day, [0] * n_bins
             # same day or late straddler: fold into the open day
             bins[b] += 1
-        state.update((cur_day, *bins))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (cur_day, *bins), out
 
-    return (
-        events.withWatermark("ts", DRIFT_STREAM_WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=DRIFT_STREAM_OUTPUT_SCHEMA,
-            stateStructType=DRIFT_STREAM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.withWatermark("ts", WATERMARK_DELAY),
+        ["event_type"],
+        DRIFT_STREAM_STATE_SCHEMA,
+        DRIFT_STREAM_OUTPUT_SCHEMA,
+        (-1,) + (0,) * n_bins,
+        _advance,
+        order=["ts", "event_id"],
     )
 
 
@@ -837,7 +702,6 @@ SCHEMA_STREAM_OUTPUT_SCHEMA = (
 SCHEMA_STREAM_STATE_SCHEMA = (
     "keys array<string>, vtypes array<string>, seeded boolean"
 )
-SCHEMA_STREAM_WATERMARK = "10 minutes"
 
 
 def schema_drift_stream(events: DataFrame) -> DataFrame:
@@ -866,7 +730,6 @@ def schema_drift_stream(events: DataFrame) -> DataFrame:
     micro-batch process in (ts, event_id) order, the monitors' shared
     convention.
     """
-    cols = ["event_type", "key", "vtype", "prev_vtype", "kind"]
 
     def _stringify(v: Any) -> str | None:
         # mirror from_json(map<string,string>)'s scalar rendering.
@@ -935,28 +798,14 @@ def schema_drift_stream(events: DataFrame) -> DataFrame:
         return "string"
 
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import json as _json  # noqa: PLC0415 — worker-side import
 
-        import pandas as pd  # noqa: PLC0415 — worker-side import
-
         (event_type,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        if state.exists:
-            keys, vtypes, seeded = state.get
-            inv = dict(zip(list(keys), list(vtypes)))
-        else:
-            inv, seeded = {}, False
+        keys, vtypes, seeded = state
+        inv = dict(zip(list(keys), list(vtypes)))
         out: list[dict] = []
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
         for row in rows.itertuples(index=False):
             try:
                 kv = _json.loads(row.props) or {}
@@ -995,19 +844,16 @@ def schema_drift_stream(events: DataFrame) -> DataFrame:
                     )
                     inv[k] = vt  # re-register: a flap back alarms again
         ks = sorted(inv)
-        state.update((ks, [inv[k] for k in ks], seeded))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (ks, [inv[k] for k in ks], seeded), out
 
-    return (
-        events.withWatermark("ts", SCHEMA_STREAM_WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=SCHEMA_STREAM_OUTPUT_SCHEMA,
-            stateStructType=SCHEMA_STREAM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.withWatermark("ts", WATERMARK_DELAY),
+        ["event_type"],
+        SCHEMA_STREAM_STATE_SCHEMA,
+        SCHEMA_STREAM_OUTPUT_SCHEMA,
+        ([], [], False),
+        _advance,
+        order=["ts", "event_id"],
     )
 
 
@@ -1022,7 +868,6 @@ ORDER_STREAM_OUTPUT_SCHEMA = (
 )
 # state: the id-max frontier event per user
 ORDER_STREAM_STATE_SCHEMA = "last_id long, last_ts_us long"
-ORDER_STREAM_WATERMARK = "10 minutes"
 
 
 def order_integrity_stream(events: DataFrame) -> DataFrame:
@@ -1046,27 +891,14 @@ def order_integrity_stream(events: DataFrame) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    cols = [
-        "user_id", "event_id", "ts", "prev_event_id", "prev_ts", "lag_s"
-    ]
-
     def _advance(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (user_id,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        last_id, last_ts_us = state.get if state.exists else (None, None)
+        last_id, last_ts_us = state
         out: list[dict] = []
-        rows = pd.concat(list(batches), ignore_index=True).sort_values(
-            ["event_id", "ts"]
-        )
         for row in rows.itertuples(index=False):
             ts_us = int(row.ts.value // 1_000)
             if last_id is None or row.event_id > last_id:
@@ -1086,22 +918,18 @@ def order_integrity_stream(events: DataFrame) -> DataFrame:
                         }
                     )
                 last_id, last_ts_us = int(row.event_id), ts_us
-        state.update((last_id, last_ts_us))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (last_id, last_ts_us), out
 
-    return (
+    return keyed_fold(
         events.filter(
             F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-        )
-        .withWatermark("ts", ORDER_STREAM_WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _advance,
-            outputStructType=ORDER_STREAM_OUTPUT_SCHEMA,
-            stateStructType=ORDER_STREAM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ).withWatermark("ts", WATERMARK_DELAY),
+        ["user_id"],
+        ORDER_STREAM_STATE_SCHEMA,
+        ORDER_STREAM_OUTPUT_SCHEMA,
+        (None, None),
+        _advance,
+        order=["event_id", "ts"],
     )
 
 
@@ -1115,7 +943,6 @@ BACKLOG_STREAM_OUTPUT_SCHEMA = (
 )
 # state: the minute frontier and the queue depth behind it
 BACKLOG_STREAM_STATE_SCHEMA = "last_minute long, backlog long"
-BACKLOG_STREAM_WATERMARK = "10 minutes"
 # default drain rate (events/minute) — deployments size this from
 # rate_limit_sweep's rate_per_min column
 BACKLOG_RATE_PER_MIN = 6000
@@ -1151,23 +978,15 @@ def backlog_monitor_stream(
     """
     from pyspark.sql import functions as F
 
-    cols = ["event_type", "minute", "arrivals", "backlog"]
     rate = int(rate_per_min)
 
     def _drain(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (event_type,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        last_m, backlog = state.get if state.exists else (None, 0)
-        rows = pd.concat(list(batches), ignore_index=True)
+        last_m, backlog = state
         ts = pd.DatetimeIndex(rows["ts"])
         # tz-free absolute minute: days since epoch * 1440 + in-day minutes
         days = (ts.normalize() - pd.Timestamp(0)).days
@@ -1204,20 +1023,17 @@ def backlog_monitor_stream(
                     "backlog": int(backlog),
                 }
             )
-        state.update((last_m, int(backlog)))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (last_m, int(backlog)), out
 
-    return (
-        events.filter(F.col("ts").isNotNull())
-        .withWatermark("ts", BACKLOG_STREAM_WATERMARK)
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _drain,
-            outputStructType=BACKLOG_STREAM_OUTPUT_SCHEMA,
-            stateStructType=BACKLOG_STREAM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_fold(
+        events.filter(F.col("ts").isNotNull()).withWatermark(
+            "ts", WATERMARK_DELAY
+        ),
+        ["event_type"],
+        BACKLOG_STREAM_STATE_SCHEMA,
+        BACKLOG_STREAM_OUTPUT_SCHEMA,
+        (None, 0),
+        _drain,
     )
 
 
@@ -1231,7 +1047,6 @@ TTL_STREAM_OUTPUT_SCHEMA = (
 )
 # state: the key's last-touch timestamp (epoch seconds)
 TTL_STREAM_STATE_SCHEMA = "last_ts_s long"
-TTL_STREAM_WATERMARK = "10 minutes"
 # default cache TTL (seconds) — deployments size this from
 # ttl_staleness_sweep's miss curve
 TTL_STREAM_DEFAULT_S = 900
@@ -1264,23 +1079,15 @@ def ttl_refetch_stream(
     """
     from pyspark.sql import functions as F
 
-    cols = ["user_id", "event_id", "ts", "gap_s", "kind"]
     ttl = int(ttl_s)
 
     def _touch(
-        key: tuple[Any, ...],
-        batches: Iterator["pd.DataFrame"],
-        state: GroupState,
-    ) -> Iterator["pd.DataFrame"]:
+        key: tuple, state: tuple, rows: pd.DataFrame
+    ) -> tuple[tuple, list[dict]]:
         import pandas as pd  # noqa: PLC0415 — worker-side import
 
         (user_id,) = key
-        if state.hasTimedOut:  # no timeout configured; defensive
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        (last_s,) = state.get if state.exists else (None,)
-        rows = pd.concat(list(batches), ignore_index=True)
+        (last_s,) = state
         rows["ts_s"] = (
             pd.DatetimeIndex(rows["ts"]).asi8 // 1_000_000_000
         )
@@ -1309,20 +1116,15 @@ def ttl_refetch_stream(
                     }
                 )
             last_s = ts_s
-        state.update((last_s,))
-        yield pd.DataFrame(out) if out else pd.DataFrame(columns=cols)
+        return (last_s,), out
 
-    return (
+    return keyed_fold(
         events.filter(
             F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-        )
-        .withWatermark("ts", TTL_STREAM_WATERMARK)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _touch,
-            outputStructType=TTL_STREAM_OUTPUT_SCHEMA,
-            stateStructType=TTL_STREAM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ).withWatermark("ts", WATERMARK_DELAY),
+        ["user_id"],
+        TTL_STREAM_STATE_SCHEMA,
+        TTL_STREAM_OUTPUT_SCHEMA,
+        (None,),
+        _touch,
     )

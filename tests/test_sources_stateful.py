@@ -157,55 +157,3 @@ def test_archive_writer_partition_layout(spark, tmp_path):
     )
     assert n_pruned == want
     assert "PartitionFilters" in plan
-
-
-def test_transform_with_state_plan_builds(spark):
-    """The transformWithStateInPandas plan must construct with the session
-    output schema even where execution is unavailable (the TWS state server
-    speaks protobuf; this container has no google.protobuf)."""
-    from inde1_spark.streaming.stateful import sessionize_stream_tws
-
-    # an empty batch DataFrame is enough to build + analyze the plan
-    out = sessionize_stream_tws(spark.createDataFrame([], PARKING_EVENT_FLAT))
-    assert out.columns == [
-        "license_plate", "parking_lot_id", "parking_spot_id",
-        "entry_ts", "exit_ts", "duration_min",
-    ]
-
-
-def test_transform_with_state_sessionize_matches_batch(spark, tmp_path):
-    """T3/T4 on the Spark-4 transformWithStateInPandas API: must equal the
-    batch pairing AND the applyInPandasWithState implementation. Executable
-    only where google.protobuf exists (the TWS state-server IPC needs it)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from inde1_spark.streaming.stateful import sessionize_stream_tws
-
-    events, _, _ = to_spark(spark, FIXTURE)
-    data_dir = tmp_path / "data"
-    data_dir.mkdir()
-    rows = events.toJSON().collect()
-    half = len(rows) // 2
-    (data_dir / "a.json").write_text("\n".join(rows[:half]))
-    (data_dir / "b.json").write_text("\n".join(rows[half:]))
-
-    stream = (
-        spark.readStream.schema(PARKING_EVENT_FLAT)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(data_dir))
-    )
-    got: list = []
-    q = (
-        sessionize_stream_tws(stream)
-        .writeStream.foreachBatch(lambda df, _id: got.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    want = P.session_durations(events).collect()
-    key = lambda r: (r["license_plate"], r["parking_lot_id"], r["parking_spot_id"],
-                     r["entry_ts"], r["exit_ts"])
-    assert sorted(map(key, got)) == sorted(map(key, want))

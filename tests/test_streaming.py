@@ -1233,28 +1233,32 @@ def test_ttl_refetch_stream_matches_batch_sweep(spark, tmp_path):
 
 
 def test_backlog_and_ttl_streams_restart_from_checkpoint(spark, tmp_path):
-    """Restart contract for the r14 monitor siblings: after a stop, a new
-    file drains against the CHECKPOINTED state — the backlog frontier and
-    the TTL last-touch survive, already-emitted rows never re-emit."""
+    """Restart contract for the keyed monitors: after a stop, a new file
+    drains against the CHECKPOINTED state — the backlog frontier, the TTL
+    last-touch and the array-typed Misra-Gries and schema-inventory states
+    survive, and already-emitted rows never re-emit."""
     import json
     import os
+    from collections import Counter
     from datetime import datetime, timedelta
 
     from inde1_spark.streaming.stateful import (
         backlog_monitor_stream,
+        schema_drift_stream,
+        space_saving_stream,
         ttl_refetch_stream,
     )
 
     base = datetime(2024, 3, 1)
 
-    def row(eid, sec):
+    def row(eid, sec, user_id=1, props="{}"):
         return {
             "event_id": eid,
             "ts": (base + timedelta(seconds=sec)).isoformat(),
-            "user_id": 1,
+            "user_id": user_id,
             "event_type": "m",
             "value": 1.0,
-            "props": "{}",
+            "props": props,
         }
 
     schema = (
@@ -1312,6 +1316,50 @@ def test_backlog_and_ttl_streams_restart_from_checkpoint(spark, tmp_path):
     second = drain(lambda s: ttl_refetch_stream(s, ttl_s=60), tdir, tckpt)
     # the checkpointed last-touch makes this a refetch, not a compulsory
     assert [(r["kind"], r["gap_s"]) for r in second] == [("refetch", 100)]
+
+    def restarted(name, builder, files):
+        """Drain each file after a restart, then check the rows equal one
+        uninterrupted drain of all files; returns each restart's rows."""
+        data = tmp_path / f"{name}_data"
+        data.mkdir()
+        runs = []
+        for i, rows in enumerate(files):
+            p = data / f"part-{i}.json"
+            p.write_text("\n".join(json.dumps(r) for r in rows))
+            os.utime(p, (1_000_000 + 100 * i, 1_000_000 + 100 * i))
+            runs.append(drain(builder, data, tmp_path / f"{name}_ckpt"))
+        whole = drain(builder, data, tmp_path / f"{name}_ckpt_whole")
+        assert Counter(r for run in runs for r in run) == Counter(whole)
+        return runs
+
+    # ---- Misra-Gries, array<long> state: capacity 2, one shard ----
+    _, second = restarted(
+        "mg",
+        lambda s: space_saving_stream(s, capacity=2, n_shards=1),
+        [
+            [row(i, i, user_id=u) for i, u in enumerate([1, 1, 1, 2, 2, 3])],
+            [row(10 + i, 60 + i, user_id=u) for i, u in enumerate([2, 2, 2, 4])],
+        ],
+    )
+    # {1: 2, 2: 1} after file 0 (dec 1) + {2: 3, 4: 1} -> {1: 1, 2: 3}, dec 2
+    assert sorted(
+        (r["user_id"], r["est_count"], r["err_bound"]) for r in second
+    ) == [(1, 1, 2), (2, 3, 2)]
+
+    # ---- schema drift, array<string> + boolean state ----
+    _, second = restarted(
+        "schema",
+        schema_drift_stream,
+        [
+            [row(1, 0, props='{"a": 1}'), row(2, 1, props='{"a": 1, "b": "x"}')],
+            [row(3, 60, props='{"a": "y", "b": "z"}')],
+        ],
+    )
+    # the checkpointed inventory (seeded, a:int) alarms; a lost one would
+    # seed silently on this event
+    assert [
+        (r["key"], r["vtype"], r["prev_vtype"], r["kind"]) for r in second
+    ] == [("a", "string", "int", "type_changed")]
 
 
 def test_window_stream_restarts_at_the_checkpointed_width(spark, tmp_path):
@@ -1380,3 +1428,67 @@ def test_window_stream_restarts_at_the_checkpointed_width(spark, tmp_path):
         ).collect()
     }
     assert {**first, **second} == want
+
+
+def test_state_functions_pickle_by_value(spark, tmp_path, monkeypatch):
+    """Every keyed-state builder's state function is shipped by value:
+    it loads in a fresh interpreter that cannot import this package, and
+    loading imports none of it (executors need no ``inde1_spark`` on
+    their PYTHONPATH)."""
+    import inspect
+    import subprocess
+
+    from pyspark import cloudpickle
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from inde1_spark.streaming import stateful
+
+    captured: list = []
+    original = PandasGroupedOpsMixin.applyInPandasWithState
+
+    def capture(self, func, *args, **kwargs):
+        captured.append(func)
+        return original(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(
+        PandasGroupedOpsMixin, "applyInPandasWithState", capture
+    )
+    events = spark.createDataFrame(
+        [],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string, license_plate string, "
+        "parking_lot_id string, parking_spot_id string",
+    )
+    builders = [
+        f for name, f in inspect.getmembers(stateful, inspect.isfunction)
+        if name.endswith("_stream") and f.__module__ == stateful.__name__
+    ]
+    paths = []
+    for builder in builders:
+        captured.clear()
+        builder(events)
+        assert len(captured) == 1, builder.__name__
+        path = tmp_path / f"{builder.__name__}.pkl"
+        path.write_bytes(cloudpickle.dumps(captured[0]))
+        paths.append(str(path))
+    assert len(paths) == 11
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and not os.path.abspath(p).startswith(repo)
+    )
+    load = (
+        "import pickle, sys\n"
+        "for p in sys.argv[1:]:\n"
+        "    with open(p, 'rb') as f:\n"
+        "        pickle.load(f)\n"
+        "print(sorted(m for m in sys.modules if m.startswith('inde1_spark')))\n"
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", load, *paths],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.strip() == "[]"
