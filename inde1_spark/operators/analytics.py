@@ -3917,7 +3917,7 @@ def markov_stationary(
         inc = contrib.groupBy("s").agg(F.sum("m").cast("long").alias("m_nano"))
         pi = lazy_checkpoint(
             pi.join(inc, "s", "left").selectExpr("s", "k", upd_sql),
-            bounded=True,
+            adaptive=False,
         )
     return pi.join(F.broadcast(rowtot.withColumnRenamed("u", "s")), "s", "left").select(
         F.col("s").alias("state"),
@@ -7609,7 +7609,7 @@ def hitting_time_markov(
                 f"CASE WHEN s = '{tq}' THEN 0L ELSE 1000000000 "
                 "+ coalesce(m_nano, 0L) END AS t_nano",
             ),
-            bounded=True,
+            adaptive=False,
         )
     return (
         t.join(rowtot.select(F.col("u").alias("s"), "tot"), "s", "left")

@@ -222,9 +222,9 @@ def semdedup(
     cents = _init_centroids(embeddings, k)
     for _ in range(iters):
         cents = _update(_assign(embeddings, cents))
-    cents = lazy_checkpoint(cents, bounded=True)
+    cents = lazy_checkpoint(cents, adaptive=False)
     asg = lazy_checkpoint(
-        _assign(embeddings, cents).select("vec_id", "cluster"), bounded=True
+        _assign(embeddings, cents).select("vec_id", "cluster"), adaptive=False
     )
 
     # candidate-first verify (same shape as dedup_minhash): the cluster
@@ -706,7 +706,7 @@ def semdedup_incremental(
     # the final centroids feed BOTH assigns below; a lazy localCheckpoint
     # makes the Lloyd chain a lineage leaf (k rows materialized once, still
     # no eager action — the semdedup/connected_components pattern)
-    cents = lazy_checkpoint(cents, bounded=True)
+    cents = lazy_checkpoint(cents, adaptive=False)
 
     s_asg = _assign(standing, cents).select(
         F.col("cluster"), F.col("vec_id").alias("vec_idx")

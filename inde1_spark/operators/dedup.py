@@ -1948,7 +1948,8 @@ def kcore_dup_graph(
         e = lazy_checkpoint(
             e.join(keep.withColumnRenamed("u", "doc_a"), ["k", "doc_a"]).join(
                 keep.withColumnRenamed("u", "doc_b"), ["k", "doc_b"]
-            )
+            ),
+            adaptive=False,
         )
     # each surviving edge contributes both endpoints: |E_k| = rows / 2
     counts = (
@@ -2565,7 +2566,8 @@ def lpa_labels(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
         labels = lazy_checkpoint(
             nbrs.join(labels.withColumnRenamed("u", "v"), "v")
             .groupBy("u")
-            .agg(F.mode("label", deterministic=True).alias("label"))
+            .agg(F.mode("label", deterministic=True).alias("label")),
+            adaptive=False,
         )
     return labels
 
@@ -3166,7 +3168,10 @@ def graph_modularity_audit(
     edges = persist(
         dedup_ngram_jaccard(documents, threshold).select("doc_a", "doc_b")
     )
-    labels = persist(lpa_labels(edges, rounds))
+    # read three times; the last round's checkpoint already keeps its blocks,
+    # and a persisted copy of its hash-partitioned leaf would be missed by
+    # the self-joined reads
+    labels = lpa_labels(edges, rounds)
     la = labels.select(F.col("u").alias("doc_a"), F.col("label").alias("lab_a"))
     lb = labels.select(F.col("u").alias("doc_b"), F.col("label").alias("lab_b"))
     tagged = edges.join(la, "doc_a").join(lb, "doc_b")

@@ -251,17 +251,6 @@ def occupancy_percent(events: DataFrame, capacities: DataFrame, asof_ts: str) ->
     )
 
 
-def top_vehicles(events: DataFrame, k: int = 10) -> DataFrame:
-    """W2: top vehicles by entry frequency (doc/schemas/srvc_stats.json:82-89)."""
-    return (
-        events.filter(F.col("event_type") == EVENT_ENTRY)
-        .groupBy("license_plate")
-        .agg(F.count("*").alias("n_entries"))
-        .orderBy(F.col("n_entries").desc(), F.col("license_plate").asc())
-        .limit(k)
-    )
-
-
 def slot_state(events: DataFrame) -> DataFrame:
     """T3 batch form: last event per (lot, spot) -> live slot map.
 

@@ -1176,7 +1176,7 @@ def keyword_textrank(
             rank.join(s, "u", "left").selectExpr(
                 "u", "wout", "n_nodes", upd_sql
             ),
-            bounded=True,
+            adaptive=False,
         )
     return (
         rank.orderBy(F.desc("r_nano"), F.asc("u"))

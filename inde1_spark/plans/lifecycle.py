@@ -6,7 +6,9 @@ intermediates are shared by every operator module, so they live here:
 - ``persist``: self-joined intermediates (shingles, band tables, round
   tables) are persisted so their pipeline runs once per job.
 - ``lazy_checkpoint``: iteration chains cut their lineage with
-  ``localCheckpoint(eager=False)`` so an unrolled plan stays linear.
+  ``localCheckpoint(eager=False)`` so an unrolled plan stays linear; a
+  chain that converts without AQE does so on a cloned session, so no
+  builder writes a conf of its caller's session.
 - ``spread``: tiny-but-CPU-heavy intermediates are re-spread at an
   EXPLICIT partition count.
 
@@ -48,53 +50,52 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n_part, *keys)
 
 
-# Reduce width for BOUNDED checkpointed round plans (see lazy_checkpoint):
-# every exchange in such a plan carries a key space bounded by a constant
-# (vocab-capped graph nodes, k*dims centroid cells, per-query top-k rows),
-# so a handful of reduce partitions is right at ANY corpus size — the map
-# side keeps the scan's full parallelism and partial aggregation collapses
-# the data before the exchange either way.
-BOUNDED_ROUND_PARTITIONS = 8
+# Shuffle width of a non-adaptive conversion (see lazy_checkpoint). One
+# width for every caller: for the bounded chains (k*dims centroid cells,
+# vocab-capped graphs, Markov state sets) a handful of reduce partitions is
+# right at ANY corpus size; for the k-core and LPA rounds it was measured
+# against the session width at 4 cores and kept.
+NON_ADAPTIVE_WIDTH = 8
 
 
-def lazy_checkpoint(df: DataFrame, bounded: bool = False) -> DataFrame:
+def lazy_checkpoint(df: DataFrame, adaptive: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage with ``localCheckpoint(eager=False)``.
+
+    ``adaptive=True`` converts the plan to its RDD under the session's own
+    confs. With AQE on, that conversion runs every query stage of the round
+    as its own Spark job before the caller's action. The
+    connected-components family, ``coverage_select`` and PageRank keep it:
+    without AQE, ``dedup_clusters`` moved its work into the action and got
+    slower.
+
+    ``adaptive=False`` converts on a clone of the session with AQE off and
+    the shuffle width at ``NON_ADAPTIVE_WIDTH``, so the round stays lazy RDD
+    lineage and runs inside the consuming action as ordinary stages. The
+    clone carries the caller's runtime confs (ANSI, time zone); the caller's
+    session is never written, and the checkpointed leaf is wrapped back into
+    it, where the consuming query still plans with AQE. The leaf keeps the
+    conversion's output partitioning (hashed on the round's last key), which
+    an adaptive leaf does not: self-joined reads of a persisted copy of it
+    miss the cache, so read the leaf itself. The bounded chains
+    (k-means, Markov, hitting time, TextRank) and the corpus-scale k-core
+    peels and LPA rounds use it: at 4 cores it cut ``iterative_queries``'
+    build jobs from 44 to 12 with identical rows.
+    """
+    if adaptive:
+        df = df.localCheckpoint(eager=False)
+    else:
+        sp = df.sparkSession
+        clone = sp._jsparkSession.cloneSession()
+        conf = clone.sessionState().conf()
+        conf.setConfString("spark.sql.adaptive.enabled", "false")
+        conf.setConfString("spark.sql.shuffle.partitions", str(NON_ADAPTIVE_WIDTH))
+        dataset = sp._jvm.org.apache.spark.sql.classic.Dataset
+        leaf = dataset.ofRows(clone, df._jdf.queryExecution().analyzed())
+        leaf = leaf.localCheckpoint(False).logicalPlan()
+        df = DataFrame(dataset.ofRows(sp._jsparkSession, leaf), sp)
     # localCheckpoint persists the underlying RDD OUTSIDE the cache manager
     # (DataFrame.unpersist can't see it), so register the LogicalRDD's java
     # RDD handle for release_persisted() to unpersist directly.
-    #
-    # bounded=True — for iteration chains whose checkpointed plans only
-    # shuffle BOUNDED key spaces (kmeans (cid, dim) cells, vocab-capped
-    # word graphs, bounded Markov state sets) — additionally disables AQE
-    # and pins a small shuffle width for the plan->RDD conversion: with
-    # AQE on, toRdd() on an adaptive plan MATERIALIZES every query stage
-    # eagerly (each exchange becomes its own job with full scheduler
-    # round-trips), so an 8-round unroll paid ~6 jobs per round at build
-    # time; with AQE off the rounds stay lazy RDD lineage and execute
-    # inside the consuming action as ordinary stages (r11 A/B:
-    # semdedup_incremental 3.74s -> 1.92s, semdedup_threshold_sweep
-    # 3.53s -> 2.39s, identical output). The fixed small width replaces
-    # the coalescing AQE would have done on those kB-sized exchanges and
-    # is scale-safe BY DEFINITION of bounded (the reduce side never grows
-    # with the corpus). Corpus-scale round tables (connected components,
-    # k-core peels, LPA labels) keep the default: their exchanges need
-    # AQE's byte-based sizing, and the measured A/B regressed 2-3x without
-    # it. Session confs are restored immediately; the consuming query
-    # itself still runs with AQE.
-    sp = df.sparkSession
-    if bounded:
-        old_aqe = sp.conf.get("spark.sql.adaptive.enabled", "true")
-        old_width = sp.conf.get("spark.sql.shuffle.partitions", "200")
-        sp.conf.set("spark.sql.adaptive.enabled", "false")
-        sp.conf.set(
-            "spark.sql.shuffle.partitions", str(BOUNDED_ROUND_PARTITIONS)
-        )
-        try:
-            df = df.localCheckpoint(eager=False)
-        finally:
-            sp.conf.set("spark.sql.adaptive.enabled", old_aqe)
-            sp.conf.set("spark.sql.shuffle.partitions", old_width)
-    else:
-        df = df.localCheckpoint(eager=False)
     try:
         _PERSISTED.append(df._jdf.queryExecution().analyzed().rdd())
     except Exception:

@@ -422,7 +422,7 @@ def embedding_admission_stream(
     cents = _init_centroids(index, kk)
     for _ in range(it):
         cents = _update(_assign(index, cents))
-    cents = lazy_checkpoint(cents, bounded=True)
+    cents = lazy_checkpoint(cents, adaptive=False)
     members = _assign(index, cents).select(
         "cluster",
         F.col("vec_id").alias("vec_idx"),

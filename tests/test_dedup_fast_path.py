@@ -450,6 +450,52 @@ def test_kcore_peels_every_k_in_one_chain(spark):
     assert release_persisted() == 1 + KCORE_ROUNDS == 5
 
 
+def _build_jobs(spark, group, build) -> int:
+    """Spark jobs fired while ``build()`` builds a plan (no action)."""
+    from inde1_spark.operators.dedup import release_persisted
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        build()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_persisted()
+
+
+def test_graph_rounds_fire_no_stage_jobs_while_built(spark):
+    # the k-core peels and LPA rounds convert without adaptive execution,
+    # so a round does not run its query stages as jobs while the plan is
+    # built: k-core fires only the jobs that materialize its edge table,
+    # and LPA at most one job per round beyond its first
+    from inde1_spark.operators.dedup import (
+        LPA_ROUNDS,
+        dedup_ngram_jaccard,
+        kcore_dup_graph,
+        label_propagation_communities,
+    )
+
+    clique = "alpha beta gamma delta epsilon zeta eta theta"
+    pair = "iota kappa lambda mu nu xi omicron pi"
+    docs = _docs(spark, [clique] * 4 + [pair] * 2)
+    edge_jobs = _build_jobs(
+        spark,
+        "kcore-edges",
+        lambda: dedup_ngram_jaccard(docs).select("doc_a", "doc_b").collect(),
+    )
+    assert _build_jobs(spark, "kcore", lambda: kcore_dup_graph(docs)) <= edge_jobs
+    first = _build_jobs(
+        spark, "lpa-1", lambda: label_propagation_communities(docs, rounds=1)
+    )
+    every = _build_jobs(
+        spark, "lpa", lambda: label_propagation_communities(docs)
+    )
+    assert every - first <= LPA_ROUNDS - 1
+
+
 def test_lpa_ties_go_to_the_smallest_label(spark):
     # path 1-2-3-4 and star 10-{11,12,13}: every vote in the first round
     # is a tie, so "ties to the smallest label" pulls both components to

@@ -1,11 +1,13 @@
 """Plan-lifecycle helpers (inde1_spark/plans/lifecycle.py).
 
-``lazy_checkpoint(bounded=True)`` flips two session confs around the
-plan->RDD conversion and must hand them back unchanged, also when the
-checkpoint raises. ``spread`` must fix its repartition at the session's
-shuffle width when it is called, and that width is one partition per core
-unless the deployment sets it. Every test here builds plans only: the job
-group fixture fails any test that fires a Spark job.
+``lazy_checkpoint(adaptive=False)`` converts on a clone of the caller's
+session, with AQE off at the non-adaptive width and the caller's other
+runtime confs, and never writes a conf of the caller's session, also when
+the conversion raises. ``spread`` must fix its repartition at the
+session's shuffle width when it is called, and that width is one partition
+per core unless the deployment sets it. Every test here builds plans
+only: the job group fixture fails any test that fires a Spark job while
+building.
 """
 
 from __future__ import annotations
@@ -15,7 +17,10 @@ import re
 import sys
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
+from pyspark.sql.conf import RuntimeConfig
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -23,14 +28,16 @@ from inde1_spark.plans import lifecycle
 
 AQE = "spark.sql.adaptive.enabled"
 WIDTH = "spark.sql.shuffle.partitions"
+TZ = "spark.sql.session.timeZone"
 GROUP = "lifecycle-no-jobs"
 
 
 @pytest.fixture
 def session(spark):
-    """The shared session with its two confs saved and a job group set;
-    asserts on teardown that no job ran and restores both confs."""
-    saved = {k: spark.conf.get(k) for k in (AQE, WIDTH)}
+    """The shared session with three confs saved and a job group set;
+    asserts on teardown that no job ran in the group and restores the
+    confs."""
+    saved = {k: spark.conf.get(k) for k in (AQE, WIDTH, TZ)}
     sc = spark.sparkContext
     sc.setJobGroup(GROUP, "lifecycle tests fire no jobs")
     try:
@@ -47,41 +54,60 @@ def _df(spark) -> DataFrame:
     return spark.createDataFrame([(1, 2, 3)], "a long, b long, c long")
 
 
-def test_bounded_checkpoint_restores_session_confs(session):
+def _writes_denied(monkeypatch):
+    """Fail any write to a session's runtime confs from Python."""
+
+    def denied(self, *args):
+        raise AssertionError(f"conf written: {args}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", denied)
+    monkeypatch.setattr(RuntimeConfig, "unset", denied)
+
+
+def test_non_adaptive_checkpoint_never_writes_caller_confs(session, monkeypatch):
     session.conf.set(AQE, "true")
     session.conf.set(WIDTH, "13")
+    before = dict(session.conf.getAll)
+    _writes_denied(monkeypatch)
     try:
-        out = lifecycle.lazy_checkpoint(_df(session), bounded=True)
+        out = lifecycle.lazy_checkpoint(_df(session), adaptive=False)
         assert out.columns == ["a", "b", "c"]
-        assert session.conf.get(AQE) == "true"
-        assert session.conf.get(WIDTH) == "13"
+        assert out.sparkSession is session
+        assert dict(session.conf.getAll) == before
+        # a plan the conversion rejects: batch planning of a streaming source
+        stream = session.readStream.format("rate").load()
+        with pytest.raises(AnalysisException, match="streaming sources"):
+            lifecycle.lazy_checkpoint(stream, adaptive=False)
+        assert dict(session.conf.getAll) == before
     finally:
         lifecycle.release_persisted()
 
 
-def test_bounded_checkpoint_restores_confs_when_checkpoint_raises(
-    session, monkeypatch
-):
-    seen = {}
-
-    def boom(self, eager=True):
-        seen.update({k: session.conf.get(k) for k in (AQE, WIDTH)})
-        raise RuntimeError("checkpoint failed")
-
-    df = _df(session)
-    monkeypatch.setattr(type(df), "localCheckpoint", boom)
+def test_non_adaptive_checkpoint_runs_on_a_clone_without_aqe(session):
     session.conf.set(AQE, "true")
     session.conf.set(WIDTH, "13")
-    with pytest.raises(RuntimeError, match="checkpoint failed"):
-        lifecycle.lazy_checkpoint(df, bounded=True)
-    # the conversion ran with AQE off at the bounded width ...
-    assert seen == {
-        AQE: "false",
-        WIDTH: str(lifecycle.BOUNDED_ROUND_PARTITIONS),
-    }
-    # ... and the session got its own values back
-    assert session.conf.get(AQE) == "true"
-    assert session.conf.get(WIDTH) == "13"
+    session.conf.set(TZ, "Asia/Kathmandu")
+    try:
+        grouped = _df(session).groupBy("a").count()
+        out = lifecycle.lazy_checkpoint(grouped, adaptive=False)
+        # with AQE on, the conversion would have run the exchange as a job
+        # (the fixture fails the test) and coalesced the width; without it
+        # the round is lazy lineage at the non-adaptive width
+        leaf = out._jdf.queryExecution().analyzed()
+        assert leaf.getClass().getSimpleName() == "LogicalRDD"
+        assert leaf.rdd().getNumPartitions() == lifecycle.NON_ADAPTIVE_WIDTH
+        # the clone carries the caller's runtime confs: its optimizer folds
+        # current_timezone() from the caller's zone, where a fresh session
+        # would use the JVM default. Reading the row runs one job, outside
+        # the group the fixture checks
+        tz = lifecycle.lazy_checkpoint(
+            session.range(1).select(F.current_timezone().alias("tz")),
+            adaptive=False,
+        )
+        session.sparkContext.setJobGroup("lifecycle-read", "read the row")
+        assert tz.collect()[0].tz == "Asia/Kathmandu"
+    finally:
+        lifecycle.release_persisted()
 
 
 @pytest.mark.parametrize("width", [7, 11])

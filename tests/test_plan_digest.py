@@ -102,8 +102,8 @@ def test_old_dump_gets_one_warning(tmp_path, capsys):
 
 def test_build_job_changes_are_info_lines(tmp_path, capsys):
     a, b = _base(), _base()
-    a[pd.BUILD_JOBS] = {"q00": 28, "q01": 0, "s0": 3}
-    b[pd.BUILD_JOBS] = {"q00": 19, "q01": 0, "s0": 3}
+    a[pd.BUILD_JOBS] = {"q00": [28, 28], "q01": [0, 0], "s0": [3, 3]}
+    b[pd.BUILD_JOBS] = {"q00": [19, 19], "q01": [0, 0], "s0": [3, 3]}
     rc, out = _diff(tmp_path, a, b, capsys)
     assert rc == 0
     info = [line for line in out.splitlines() if line.startswith("info:")]
@@ -113,6 +113,39 @@ def test_build_job_changes_are_info_lines(tmp_path, capsys):
     del a[pd.BUILD_JOBS]
     rc, out = _diff(tmp_path, a, b, capsys)
     assert rc == 0 and "info:" not in out and "0 unmatched" in out
+
+
+def test_build_job_ranges_that_overlap_are_not_reported(tmp_path, capsys):
+    a, b = _base(), _base()
+    # a dump taken before ranges were recorded holds one count per entry
+    a[pd.BUILD_JOBS] = {"q00": 23, "q01": [23, 24], "q02": [40, 44], "q03": 5}
+    b[pd.BUILD_JOBS] = {"q00": [23, 24], "q01": [24, 24], "q02": [3, 3], "q03": [5, 7]}
+    rc, out = _diff(tmp_path, a, b, capsys)
+    assert rc == 0
+    info = [line for line in out.splitlines() if line.startswith("info:")]
+    assert info == ["info: build jobs of q02: 40-44 -> 3"]
+
+
+def test_rounds_are_compared_like_entries(tmp_path, capsys):
+    a, b = _base(), _base()
+    a[pd.ROUNDS] = {"q00": ["Join r1", "Join r2"], pd.UNSTABLE[0]: ["Expand"]}
+    b[pd.ROUNDS] = {"q00": ["Join r1", "Join r2 changed"], pd.UNSTABLE[0]: ["Expand 2"]}
+    rc, out = _diff(tmp_path, a, b, capsys)
+    assert rc == 1
+    assert "differs: q00 round 2" in out
+    assert f"differs (unstable across runs, check its parity test): {pd.UNSTABLE[0]} round 1" in out
+    assert "1 differ, 1 unstable differ, 0 unmatched" in out
+    # a round that one dump has and the other does not is unmatched
+    b[pd.ROUNDS] = {"q00": ["Join r1"], pd.UNSTABLE[0]: ["Expand"]}
+    rc, out = _diff(tmp_path, a, b, capsys)
+    assert rc == 1
+    assert "only in" in out and "q00 round 2" in out and "1 unmatched" in out
+    # identical rounds pass; a dump without the record compares no rounds
+    rc, out = _diff(tmp_path, a, a, capsys)
+    assert rc == 0
+    del a[pd.ROUNDS]
+    rc, out = _diff(tmp_path, a, b, capsys)
+    assert rc == 0 and "round" not in out
 
 
 def test_moved_names_are_the_moved_block():

@@ -503,7 +503,7 @@ def test_modularity_plan(spark):
         entrymod.staged_queries()["graph_modularity_audit"](spark, SF_SMOKE)
     )
     assert "CartesianProduct" not in r.raw and "BatchEvalPython" not in r.raw
-    assert "InMemoryTableScan" in r.raw  # edges + labels persisted
+    assert "InMemoryTableScan" in r.raw  # edges persisted
 
 
 # ---------------------------------------------------------------------------

@@ -19,10 +19,20 @@ taken by an older version of this tool, gets one warning line and only its
 plans are compared.
 
 Each entry is built under its own job group, and the number of Spark jobs
-its build fired before any action is recorded under ``_build_jobs``.
-``--diff`` prints one info line per entry whose count changed; these lines
-do not change the exit code. When either dump has no such record, the
-counts are not compared.
+its build fired before any action is recorded under ``_build_jobs``. That
+count moves from run to run for a builder that checkpoints while building,
+so an entry that fired jobs is built a second time and the record is the
+range ``[min, max]`` of the two counts. ``--diff`` prints one info line per
+entry whose two ranges do not overlap; these lines do not change the exit
+code. When either dump has no such record, the counts are not compared.
+
+A chain behind ``lazy_checkpoint`` ends at a ``LogicalRDD`` leaf in the
+entry's plan, so the optimized plan of every round is also recorded, as the
+round is checkpointed, under ``_rounds`` (``{name: [plan, ...]}``).
+``--diff`` compares each round like an entry of its own, named
+``<name> round <i>``. Optimized logical plans do not depend on adaptive
+execution, so a change of how rounds are converted digests the same rounds.
+When either dump has no such record, rounds are not compared.
 
 Expression ids (``#123L``), RDD ids (``[12]`` after an RDD class name,
 ``rddId=``), ``plan_id=`` tags and the numbered names of higher-order
@@ -31,7 +41,7 @@ with the order entries are built in, and are replaced with placeholders
 before writing. Persisted and checkpointed intermediates are released after
 each entry, so no entry's plan picks up another entry's cached data. Some
 builders fire jobs while building (lazy checkpoints under AQE); a full dump
-at sf0.001 takes about 160 s on 4 cores. Never run it beside pytest or a
+at sf0.001 takes about 100 s on 4 cores. Never run it beside pytest or a
 benchmark.
 
 Compare only dumps taken with the same ``SPARK_GRAFT_CPUS``: scan-parallel
@@ -84,6 +94,7 @@ SESSION = "_session"
 ORDER = "_order"
 ORACLES = "_oracles"
 BUILD_JOBS = "_build_jobs"
+ROUNDS = "_rounds"
 ACCESSORS = ("queries", "staged_queries", "test_only_queries")
 ORACLE_ACCESSORS = ("oracle_sql", "staged_oracle_sql", "test_only_oracle_sql")
 GATE_WINDOW = 50  # the driver's correctness gate verifies the first 50 queries()
@@ -103,6 +114,31 @@ def normalize(plan: str) -> str:
     for pat, repl in _NORMALIZE:
         plan = pat.sub(repl, plan)
     return plan
+
+
+def _digest_rounds(rounds: list) -> None:
+    """Make every loaded ``lazy_checkpoint`` binding append the normalized
+    optimized plan of each round to ``rounds`` before checkpointing it.
+    The lifecycle module's own name is rebound too, so a module imported
+    later binds the recording version.
+
+    A round's plan is optimized without cached-data substitution: a
+    persisted intermediate appears as its logical plan, not as the
+    physical plan inside its ``InMemoryRelation``, which shows how far
+    adaptive execution has run that plan by the time the round is built."""
+    from inde1_spark.plans import lifecycle
+
+    checkpoint = lifecycle.lazy_checkpoint
+
+    def recording(df, *args, **kwargs):
+        optimizer = df.sparkSession._jsparkSession.sessionState().optimizer()
+        plan = optimizer.execute(df._jdf.queryExecution().analyzed())
+        rounds.append(normalize(plan.toString()))
+        return checkpoint(df, *args, **kwargs)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("inde1_spark") and getattr(mod, "lazy_checkpoint", None) is checkpoint:
+            mod.lazy_checkpoint = recording
 
 
 def dump(out_path: str, sf_dir: str) -> None:
@@ -129,17 +165,33 @@ def dump(out_path: str, sf_dir: str) -> None:
         ORDER: {acc: list(qs) for acc, qs in surfaces.items()},
         ORACLES: oracles,
         BUILD_JOBS: {},
+        ROUNDS: {},
     }
-    for name, fn in registry.items():
-        group = f"plan-digest:{name}"
+    rounds: list = []
+    _digest_rounds(rounds)
+
+    def build(name: str, fn, run: int):
+        group = f"plan-digest:{name}:{run}"
         sc.setJobGroup(group, name)
         df = fn(spark, sf_dir)
         # job events reach the status tracker through the listener bus
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        plans[BUILD_JOBS][name] = len(tracker.getJobIdsForGroup(group))
+        return df, len(tracker.getJobIdsForGroup(group))
+
+    for name, fn in registry.items():
+        rounds.clear()
+        df, jobs = build(name, fn, 1)
         plans[name] = normalize(df._jdf.queryExecution().optimizedPlan().toString())
+        if rounds:
+            plans[ROUNDS][name] = list(rounds)
+        counts = [jobs]
         release_persisted()
         spark.catalog.clearCache()
+        if jobs:
+            counts.append(build(name, fn, 2)[1])
+            release_persisted()
+            spark.catalog.clearCache()
+        plans[BUILD_JOBS][name] = [min(counts), max(counts)]
     spark.stop()
     with open(out_path, "w") as f:
         json.dump(plans, f, indent=1, sort_keys=True)
@@ -175,6 +227,21 @@ def _order_changes(a: dict, b: dict, a_path: str, b_path: str) -> list[str]:
     return lines
 
 
+def _entry(key: str) -> str:
+    """The entry a compared key belongs to (``<name> round <i>`` -> name)."""
+    return key.split(" round ")[0]
+
+
+def _job_range(jobs) -> tuple[int, int]:
+    """A ``_build_jobs`` record as (min, max); a dump taken before ranges
+    were recorded holds one count."""
+    return (jobs, jobs) if isinstance(jobs, int) else tuple(jobs)
+
+
+def _show_range(lo: int, hi: int) -> str:
+    return str(lo) if lo == hi else f"{lo}-{hi}"
+
+
 def diff(a_path: str, b_path: str) -> int:
     with open(a_path) as f:
         a = json.load(f)
@@ -186,6 +253,11 @@ def diff(a_path: str, b_path: str) -> int:
     order_a, order_b = a.pop(ORDER, None), b.pop(ORDER, None)
     oracles_a, oracles_b = a.pop(ORACLES, None), b.pop(ORACLES, None)
     jobs_a, jobs_b = a.pop(BUILD_JOBS, None), b.pop(BUILD_JOBS, None)
+    rounds_a, rounds_b = a.pop(ROUNDS, None), b.pop(ROUNDS, None)
+    if rounds_a is not None and rounds_b is not None:
+        for d, rounds in ((a, rounds_a), (b, rounds_b)):
+            d.update({f"{k} round {i}": p for k, ps in rounds.items()
+                      for i, p in enumerate(ps, 1)})
     old = sorted({p for p, d in ((a_path, order_a), (a_path, oracles_a),
                                  (b_path, order_b), (b_path, oracles_b)) if d is None})
     order_lines, oracle_lines = [], []
@@ -202,20 +274,23 @@ def diff(a_path: str, b_path: str) -> int:
         ]
     only_a, only_b = sorted(a.keys() - b.keys()), sorted(b.keys() - a.keys())
     changed = sorted(k for k in a.keys() & b.keys() if a[k] != b[k])
-    stable = [k for k in changed if k not in UNSTABLE]
+    stable = [k for k in changed if _entry(k) not in UNSTABLE]
     for k in only_a:
         print(f"only in {a_path}: {k}")
     for k in only_b:
         print(f"only in {b_path}: {k}")
     for k in changed:
-        note = " (unstable across runs, check its parity test)" if k in UNSTABLE else ""
+        note = (" (unstable across runs, check its parity test)"
+                if _entry(k) in UNSTABLE else "")
         print(f"differs{note}: {k}")
     for line in order_lines + oracle_lines:
         print(line)
     if jobs_a is not None and jobs_b is not None:
         for k in sorted(jobs_a.keys() & jobs_b.keys()):
-            if jobs_a[k] != jobs_b[k]:
-                print(f"info: build jobs of {k}: {jobs_a[k]} -> {jobs_b[k]}")
+            (lo_a, hi_a), (lo_b, hi_b) = _job_range(jobs_a[k]), _job_range(jobs_b[k])
+            if hi_a < lo_b or hi_b < lo_a:
+                print(f"info: build jobs of {k}: {_show_range(lo_a, hi_a)} -> "
+                      f"{_show_range(lo_b, hi_b)}")
     n_same = len(a.keys() & b.keys()) - len(changed)
     print(f"{n_same} identical, {len(stable)} differ, "
           f"{len(changed) - len(stable)} unstable differ, "
